@@ -9,11 +9,11 @@ would otherwise accumulate MEMORY_AND_DISK blocks without bound (~24
 B/doc each, but a slow leak at 100 TB session lifetimes).
 
 :func:`register` caps that growth: each operator family keeps its
-``cap`` most recent persisted handles; registering a new one evicts
+``_CAP`` most recent persisted handles; registering a new one evicts
 and ``unpersist(blocking=False)``-es the oldest. Unpersisting a handle
 a caller still references is SAFE in Spark — the plan silently
 recomputes from source — so eviction can never change results, only
-(rarely) cost a recompute if a caller interleaves >cap concurrent uses
+(rarely) cost a recompute if a caller interleaves >_CAP concurrent uses
 of one operator family. This is a FREEING discipline, not a cache: no
 results are ever reused across operator calls.
 """
@@ -31,8 +31,8 @@ _LIVE: dict[str, deque] = defaultdict(deque)
 
 
 def register(family: str, df: DataFrame) -> DataFrame:
-    """Track a just-persisted DataFrame; evict (unpersist) the oldest
-    beyond the family's cap. Returns ``df`` for chaining."""
+    """Track a just-persisted DataFrame; evict (unpersist) the family's
+    oldest handles beyond ``_CAP``. Returns ``df`` for chaining."""
     q = _LIVE[family]
     q.append(df)
     while len(q) > _CAP:

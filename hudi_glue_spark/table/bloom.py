@@ -171,17 +171,15 @@ def _poly_pairs_np(keys: list[str]) -> np.ndarray:
     byte length mixed in (zero-padding would otherwise alias keys with
     trailing NULs — the canonical null marker contains one) and two
     SplitMix64 finalizers for the double-hash pair. All C-side numpy
-    except the per-key encode/len."""
+    except the per-key encode/len.
+
+    Keys are hashed in groups of one power-of-two length class, so each
+    group's zero-padded byte matrix is at most twice its keys' bytes: a
+    single long key no longer sizes an n × max_len matrix for the whole
+    batch."""
     bs = [k.encode("utf-8") for k in keys]
     lens = np.array([len(b) for b in bs], dtype=np.uint64)
     width = max(1, int(lens.max()))
-    mat = (
-        np.frombuffer(
-            np.array(bs, dtype=f"S{width}").tobytes(), dtype=np.uint8
-        )
-        .reshape(len(bs), width)
-        .astype(np.uint64)
-    )
     with np.errstate(over="ignore"):  # 2^64 wrap is the arithmetic
         # powers indexed by BYTE POSITION (P^0 at position 0): the
         # padding zeros beyond a key's length contribute nothing, so a
@@ -192,7 +190,20 @@ def _poly_pairs_np(keys: list[str]) -> np.ndarray:
         for i in range(width):
             pows[i] = acc
             acc = acc * _POLY_P
-        base = (mat * pows[None, :]).sum(axis=1, dtype=np.uint64)
+        base = np.empty(len(bs), dtype=np.uint64)
+        length_class = np.frexp(lens.astype(np.float64))[1]
+        for c in np.unique(length_class):
+            idx = np.flatnonzero(length_class == c)
+            w = max(1, int(lens[idx].max()))
+            mat = (
+                np.frombuffer(
+                    np.array([bs[i] for i in idx], dtype=f"S{w}").tobytes(),
+                    dtype=np.uint8,
+                )
+                .reshape(len(idx), w)
+                .astype(np.uint64)
+            )
+            base[idx] = (mat * pows[None, :w]).sum(axis=1, dtype=np.uint64)
         h1 = _splitmix64(base ^ (lens * _GOLD))
         h2 = _splitmix64(base + _GOLD + lens)
     return np.stack([h1, h2], axis=1)

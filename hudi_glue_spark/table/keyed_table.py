@@ -1170,7 +1170,7 @@ class KeyedTable:
         )
         reg = {"key": k, "seq": 1, "base": spans, "deltas": {}}
         schema = StructType.fromJson(json.loads(man.schema_json))
-        self._commit(
+        published = self._commit(
             "record_index",
             man.files_arrow(),
             schema,
@@ -1182,7 +1182,7 @@ class KeyedTable:
             new_files=[],
         )
         self._want_index("record_index")
-        return self.commits()[-1]
+        return published
 
     def drop_record_index(self) -> str | None:
         """Unregister the record index (metadata-only commit; the
@@ -1192,7 +1192,7 @@ class KeyedTable:
         if man is None or (man.stats or {}).get("record_index") is None:
             return None
         schema = StructType.fromJson(json.loads(man.schema_json))
-        self._commit(
+        published = self._commit(
             "drop_record_index",
             man.files_arrow(),
             schema,
@@ -1203,7 +1203,7 @@ class KeyedTable:
             new_files=[],
         )
         self._want_index("record_index", want=False)
-        return self.commits()[-1]
+        return published
 
     def _rli_entries_for_files(
         self,
@@ -1604,7 +1604,7 @@ class KeyedTable:
             folded, self.path, cid, k, max_records_per_file
         )
         new_reg = {"key": k, "seq": 1, "base": spans, "deltas": {}}
-        self._commit(
+        return self._commit(
             "record_index_compact",
             man.files_arrow(),
             schema,
@@ -1615,7 +1615,6 @@ class KeyedTable:
             touched=set(),
             new_files=[],
         )
-        return self.commits()[-1]
 
     # -- secondary column indexes (value → file; Hudi 1.0 parity) ----------
 
@@ -1666,7 +1665,7 @@ class KeyedTable:
         )
         prev_ci = (man.stats or {}).get("column_indexes") or {}
         reg = {"key": col, "seq": 1, "base": spans, "deltas": {}}
-        self._commit(
+        published = self._commit(
             "column_index",
             man.files_arrow(),
             schema,
@@ -1678,7 +1677,7 @@ class KeyedTable:
             new_files=[],
         )
         self._want_index("column", col)
-        return self.commits()[-1]
+        return published
 
     def drop_column_index(self, col: str) -> str | None:
         man = M.read_manifest(self.path)
@@ -1686,7 +1685,7 @@ class KeyedTable:
         if col not in prev_ci:
             return None
         schema = StructType.fromJson(json.loads(man.schema_json))
-        self._commit(
+        published = self._commit(
             "drop_column_index",
             man.files_arrow(),
             schema,
@@ -1701,7 +1700,7 @@ class KeyedTable:
             new_files=[],
         )
         self._want_index("column", col, want=False)
-        return self.commits()[-1]
+        return published
 
     def compact_column_index(
         self,
@@ -1743,7 +1742,7 @@ class KeyedTable:
             folded, self.path, cid, col, max_records_per_file
         )
         new_reg = {"key": col, "seq": 1, "base": spans, "deltas": {}}
-        self._commit(
+        return self._commit(
             "column_index_compact",
             man.files_arrow(),
             schema,
@@ -1754,7 +1753,6 @@ class KeyedTable:
             touched=set(),
             new_files=[],
         )
-        return self.commits()[-1]
 
     def _index_segment_names(
         self, stats: dict | None, strict: bool = False
@@ -2277,7 +2275,7 @@ class KeyedTable:
             if unique_keys is False and not dedupe
             else {}
         )
-        self._commit(
+        return self._commit(
             "bulk_insert",
             files,
             df.schema,
@@ -2290,7 +2288,6 @@ class KeyedTable:
             or None,
             cid=cid,
         )
-        return self.commits()[-1]
 
     def create_empty(self, schema: StructType) -> str:
         """Commit an EMPTY initial snapshot carrying a DECLARED schema
@@ -2320,8 +2317,7 @@ class KeyedTable:
             )
         self.save_meta()
         cid = M.next_commit_id(self.path)
-        self._commit("create", [], schema, rows=0, cid=cid)
-        return self.commits()[-1]
+        return self._commit("create", [], schema, rows=0, cid=cid)
 
     def validate_unique_keys(self, spark: SparkSession) -> int:
         """Distributed audit of the unique-row-identity invariant
@@ -2362,7 +2358,6 @@ class KeyedTable:
         # pinned: schema conform, untouched-file carry, and the child
         # commit id from ONE manifest (the upsert clobber window)
         man = self._pin_head()
-        assert man is not None
         existing = self.read(spark, at=man.commit_id)
         batch_names = set(batch.columns)
         batch = batch.select(
@@ -2378,54 +2373,17 @@ class KeyedTable:
         batch, maintained = self._maintain_vector_index(
             batch, (man.stats or {}).get("vector_index")
         )
-        if self.change_log:
-            batch = batch.persist()
-        cid = M.child_id(man.commit_id)
-        new_files, nrows = self._write_index_aware(batch, cid, maintained)
-        if self.partition_by:
-            replaced = {
-                self._dirname(r)
-                for r in batch.select(self.partition_by).distinct().collect()
-            }
-            files = M.with_new_files(
-                M.carried_files_arrow(man, replaced), new_files
-            )
-        else:
-            replaced = None
-            files = new_files
+        replaced = self._partition_dirs(batch) if self.partition_by else None
         # change_log: the replaced partitions' prior rows vs the batch
         # — a nightly partition refresh whose recompute barely changed
         # anything streams only the true delta, not the partition ×2
-        chlog = self._write_change_log(
+        return self._publish_rewrite(
+            "insert_overwrite", man,
             self._rows_in_partitions(existing, replaced)
             if replaced is not None
             else existing,
-            batch,
-            existing.schema,
-            rows_written=nrows,
+            batch, replaced, existing.schema, maintained, qstats,
         )
-        if self.change_log:
-            batch.unpersist()
-        self._commit(
-            "insert_overwrite",
-            files,
-            existing.schema,
-            rows=nrows,
-            rewritten=sorted(replaced) if replaced is not None else ["<all>"],
-            cid=cid,
-            base=man if replaced is not None else None,
-            touched=replaced,
-            new_files=new_files,
-            extra_stats=(
-                {
-                    **(qstats or {}),
-                    **({"vector_index": maintained} if maintained is not None else {}),
-                    **({"change_log": chlog} if chlog is not None else {}),
-                }
-                or None
-            ),
-        )
-        return self.commits()[-1]
 
     def _refresh_layout(self, man: "M.Manifest | None" = None) -> None:
         """Adopt ``man``'s (default: the HEAD manifest's) partition
@@ -2443,10 +2401,11 @@ class KeyedTable:
             if live != (self.partition_by or None):
                 self.partition_by = live
 
-    def _pin_head(self) -> "M.Manifest | None":
+    def _pin_head(self) -> "M.Manifest":
         """THE one HEAD read of a mutation: adopt the live manifest's
         partition layout and return that same manifest as the op's
-        pinned snapshot. One op, one manifest (r10 walk finding, made
+        pinned snapshot; ``FileNotFoundError`` when there is no table.
+        One op, one manifest (r10 walk finding, made
         systematic in r11): every probe, scan, carry, and planned
         child commit id must derive from this return value — reading
         HEAD again mid-op opens a window where a rival commit landing
@@ -2456,6 +2415,8 @@ class KeyedTable:
         must see the LATEST head to detect rivals. Enforced by
         tests/test_head_read_guard.py across the public API."""
         man = M.read_manifest(self.path)
+        if man is None:
+            raise FileNotFoundError(f"no table at {self.path}")
         self._refresh_layout(man)
         return man
 
@@ -2484,7 +2445,6 @@ class KeyedTable:
         # clobbered — its commit id built upon, its masks never read,
         # its deleted rows resurrected in the rewrite output.
         man = self._pin_head()
-        assert man is not None
         batch = self._derive(batch)
         self._require_columns(batch, "upsert batch")
         batch, qstats = self._enforce(batch, "upsert")
@@ -2578,54 +2538,15 @@ class KeyedTable:
             merged, maintained = self._maintain_vector_index(
                 merged, (man.stats or {}).get("vector_index")
             )
-            if maintained is not None:
-                extra_stats = {
-                    **(extra_stats or {}), "vector_index": maintained
-                }
-            # change_log: persist the merge output so the file write
-            # and the exceptAll delta share ONE evaluation (unpersisted
-            # after publish; measured ~2x op cost without the cache)
-            if self.change_log:
-                merged = merged.persist()
-            cid = M.child_id(man.commit_id)
-            new_files, nrows = self._write_index_aware(
-                merged, cid, maintained
-            )
-            chlog = self._write_change_log(
-                existing_touched, merged, existing.schema,
-                rows_written=nrows,
-            )
-            if chlog is not None:
-                extra_stats = {**(extra_stats or {}), "change_log": chlog}
-            if self.change_log:
-                merged.unpersist()
-            files = (
-                M.with_new_files(
-                    M.carried_files_arrow(man, touched), new_files
-                )
-                if touched is not None
-                else new_files
-            )
-            self._commit(
-                "upsert",
-                files,
-                existing.schema,
-                rows=nrows,
-                rewritten=sorted(touched)
-                if touched is not None
-                else ["<all>"],
-                extra_stats=extra_stats,
-                cid=cid,
-                base=man if touched is not None else None,
-                touched=touched,
-                new_files=new_files,
+            return self._publish_rewrite(
+                "upsert", man, existing_touched, merged, touched,
+                existing.schema, maintained, extra_stats,
                 # lazy: evaluated only on an OCC conflict whose range
                 # proof fails (global-scope bloom rebase)
                 probe_keys_df=batch.select(*self.key),
             )
         finally:
             batch.unpersist()
-        return self.commits()[-1]
 
     def retry_commit(
         self,
@@ -2761,23 +2682,18 @@ class KeyedTable:
         documented escape hatch for callers that pass full rows but
         mean "this key, everywhere"). On global-key-scope tables the
         flag is a no-op (identity is the key alone)."""
-        if not self.exists():
-            raise FileNotFoundError(f"no table at {self.path}")
         spark = keys.sparkSession
         # plan/publish pinned to ONE manifest (same clobber window as
         # upsert — see the comment there)
         man = self._pin_head()
-        assert man is not None
         existing = self.read(spark, at=man.commit_id)
         sel = self._delete_identity(keys, scoped)
         keys = keys.select(sel).dropDuplicates()
 
         if self.partition_by:
-            matched = existing.join(keys, on=sel, how="left_semi")
-            touched = {
-                self._dirname(r)
-                for r in matched.select(self.partition_by).distinct().collect()
-            }
+            touched = self._partition_dirs(
+                existing.join(keys, on=sel, how="left_semi")
+            )
             existing_touched = self._rows_in_partitions(existing, touched)
         else:
             touched = None
@@ -2786,38 +2702,10 @@ class KeyedTable:
         remaining = existing_touched.join(keys, on=sel, how="left_anti")
         # deleting rows never invalidates the survivors' index
         # assignments — carry the vector index forward untouched
-        vidx = (man.stats or {}).get("vector_index")
-        stats = {"vector_index": vidx} if vidx is not None else {}
-        if self.change_log:
-            remaining = remaining.persist()
-        cid = M.child_id(man.commit_id)
-        new_files, nrows = self._write_index_aware(remaining, cid, vidx)
-        chlog = self._write_change_log(
-            existing_touched, remaining, existing.schema,
-            rows_written=nrows,
+        return self._publish_rewrite(
+            "delete", man, existing_touched, remaining, touched,
+            existing.schema, (man.stats or {}).get("vector_index"),
         )
-        if chlog is not None:
-            stats["change_log"] = chlog
-        if self.change_log:
-            remaining.unpersist()
-        files = (
-            M.with_new_files(M.carried_files_arrow(man, touched), new_files)
-            if touched is not None
-            else new_files
-        )
-        self._commit(
-            "delete",
-            files,
-            existing.schema,
-            rows=nrows,
-            rewritten=sorted(touched) if touched is not None else ["<all>"],
-            extra_stats=stats or None,
-            cid=cid,
-            base=man if touched is not None else None,
-            touched=touched,
-            new_files=new_files,
-        )
-        return self.commits()[-1]
 
     def _delete_identity(
         self, keys: DataFrame, scoped: bool | None
@@ -3044,10 +2932,7 @@ class KeyedTable:
         :meth:`delete` (partition-scoped vs global identity; None
         auto-detects from the frame's columns; a list of key values
         is always GLOBAL)."""
-        if not self.exists():
-            raise FileNotFoundError(f"no table at {self.path}")
         man = self._pin_head()
-        assert man is not None
         if isinstance(keys, DataFrame):
             spark = keys.sparkSession
             # PARTITION key scope + a frame carrying the partition
@@ -3133,10 +3018,7 @@ class KeyedTable:
         filter)."""
         import re
 
-        if not self.exists():
-            raise FileNotFoundError(f"no table at {self.path}")
         man = self._pin_head()
-        assert man is not None
         if not man.files:
             return None
         schema = StructType.fromJson(json.loads(man.schema_json))
@@ -3192,10 +3074,7 @@ class KeyedTable:
                 "owned by their generation rule — SET the rule's inputs "
                 "and the column recomputes"
             )
-        if not self.exists():
-            raise FileNotFoundError(f"no table at {self.path}")
         man = self._pin_head()
-        assert man is not None
         schema = StructType.fromJson(json.loads(man.schema_json))
         unknown = set(set_exprs) - {f.name for f in schema.fields}
         if unknown:
@@ -3246,7 +3125,7 @@ class KeyedTable:
                 *self._dv_rewritten_dirs(new_files),
             }
         )
-        self._commit(
+        return self._commit(
             "update_where_dv",
             M.with_new_files(man.files_arrow(), new_files),
             schema,
@@ -3264,7 +3143,6 @@ class KeyedTable:
             new_files=new_files,
             dvs=entries,
         )
-        return self.commits()[-1]
 
     def _publish_dv_commit(
         self, spark, man, marked: DataFrame, op: str, extra_stats
@@ -3275,7 +3153,7 @@ class KeyedTable:
             return None
         schema = StructType.fromJson(json.loads(man.schema_json))
         vidx = (man.stats or {}).get("vector_index")
-        self._commit(
+        return self._commit(
             op,
             man.files_arrow(),
             schema,
@@ -3293,7 +3171,6 @@ class KeyedTable:
             new_files=[],
             dvs=entries,
         )
-        return self.commits()[-1]
 
     def _dv_prune_files(self, man, key_list: list) -> list[str]:
         """Candidate host files for the given key values: record-index
@@ -3345,7 +3222,6 @@ class KeyedTable:
             return self.bulk_insert(batch, dedupe=True)
         man = self._pin_head()
         self._require_columns(batch, "upsert_dv batch")
-        assert man is not None
         schema = StructType.fromJson(json.loads(man.schema_json))
         vidx = (man.stats or {}).get("vector_index")
         if vidx is not None:
@@ -3430,7 +3306,7 @@ class KeyedTable:
                 *self._dv_rewritten_dirs(new_files),
             }
         )
-        self._commit(
+        return self._commit(
             "upsert_dv",
             M.with_new_files(man.files_arrow(), new_files),
             schema,
@@ -3455,7 +3331,6 @@ class KeyedTable:
             new_files=new_files,
             dvs=entries,
         )
-        return self.commits()[-1]
 
     def export_masked_positions(self, dest: str | None = None) -> str:
         """Write the HEAD snapshot's dead (file, pos) pairs as one
@@ -3503,10 +3378,7 @@ class KeyedTable:
         blooms/stats are kept), so a miss is impossible."""
         files = man.files
         if self.key_scope == "partition" and self.partition_by:
-            dirs = {
-                self._dirname(r)
-                for r in best.select(self.partition_by).distinct().collect()
-            }
+            dirs = self._partition_dirs(best)
             files = [
                 f for f in files if (M.partition_of(f) or "") in dirs
             ]
@@ -3566,7 +3438,7 @@ class KeyedTable:
             )
         keep = M.carried_files_arrow(man, drop)
         vidx = (man.stats or {}).get("vector_index")
-        self._commit(
+        return self._commit(
             "drop_partitions",
             keep,
             StructType.fromJson(json.loads(man.schema_json)),
@@ -3581,7 +3453,6 @@ class KeyedTable:
             },
             cid=M.child_id(man.commit_id),
         )
-        return self.commits()[-1]
 
     def update_where(
         self, spark: SparkSession, set_exprs: dict[str, str], predicate: str
@@ -3615,17 +3486,16 @@ class KeyedTable:
         # one op, one manifest: schema check, index-carry judgement,
         # and the rewrite plan below all read THIS snapshot
         man = self._pin_head()
-        if man is not None:
-            names = [
-                f.name
-                for f in StructType.fromJson(json.loads(man.schema_json)).fields
-            ]
-            unknown = set(set_exprs) - set(names)
-            if unknown:
-                raise ValueError(
-                    f"cannot SET unknown column(s) {sorted(unknown)}; "
-                    f"table columns are {names}"
-                )
+        names = [
+            f.name
+            for f in StructType.fromJson(json.loads(man.schema_json)).fields
+        ]
+        unknown = set(set_exprs) - set(names)
+        if unknown:
+            raise ValueError(
+                f"cannot SET unknown column(s) {sorted(unknown)}; "
+                f"table columns are {names}"
+            )
 
         def transform(rows: DataFrame, hit, schema) -> DataFrame:
             out = rows.select(
@@ -3652,7 +3522,7 @@ class KeyedTable:
 
         # a SET that doesn't touch the index's vector/assignment
         # columns can't invalidate any assignment → carry the index
-        vidx = ((man.stats or {}) if man else {}).get("vector_index")
+        vidx = (man.stats or {}).get("vector_index")
         if vidx is not None:
             icols = {vidx.get("vec_col"), vidx.get("cell_col")} | set(
                 vidx.get("bucket_cols") or []
@@ -3660,8 +3530,8 @@ class KeyedTable:
             if icols & set(set_exprs):
                 vidx = None  # index columns rewritten → honest drop
         return self._rewrite_where(
-            spark, predicate, transform, "update_where", vidx=vidx,
-            enforce_updated=True, man=man,
+            spark, man, predicate, transform, "update_where", vidx=vidx,
+            enforce_updated=True,
         )
 
     def truncate(self) -> str:
@@ -3677,11 +3547,9 @@ class KeyedTable:
         ``<all>``), which is the correct semantics for a
         table-wide wipe."""
         man = self._pin_head()
-        if man is None:
-            raise FileNotFoundError(f"no table at {self.path}")
         schema = StructType.fromJson(json.loads(man.schema_json))
         cid = M.child_id(man.commit_id)
-        self._commit(
+        return self._commit(
             "truncate",
             [],
             schema,
@@ -3689,7 +3557,6 @@ class KeyedTable:
             rewritten=["<all>"],
             cid=cid,
         )
-        return self.commits()[-1]
 
     def delete_where(self, spark: SparkSession, predicate) -> str:
         """Predicate delete (Spark-SQL ``DELETE FROM t WHERE ...``,
@@ -3702,10 +3569,11 @@ class KeyedTable:
         rows never invalidates the survivors' index assignments, so a
         registered vector index is carried forward untouched."""
         man = self._pin_head()
-        vidx = ((man.stats or {}) if man else {}).get("vector_index")
+        vidx = (man.stats or {}).get("vector_index")
         return self._rewrite_where(
-            spark, predicate, lambda rows, hit, _schema: rows.filter(~hit),
-            "delete_where", vidx=vidx, man=man,
+            spark, man, predicate,
+            lambda rows, hit, _schema: rows.filter(~hit), "delete_where",
+            vidx=vidx,
         )
 
     #: skip the change log when the recorded delta would approach the
@@ -3990,46 +3858,33 @@ class KeyedTable:
     def _rewrite_where(
         self,
         spark,
+        man: "M.Manifest",
         predicate,
         transform,
         op: str,
         vidx: dict | None = None,
         enforce_updated: bool = False,
-        man: "M.Manifest | None" = None,
     ) -> str:
         """Shared predicate-DML scaffold: find partitions holding rows
         the predicate selects (NULL = not selected), rewrite ONLY those
         partitions through ``transform(rows, hit, schema)``, carry every
         untouched file forward, publish ``op``. No matches → no new
-        commit, existing head returned. ``vidx`` (caller-judged) is a
-        vector index the rewrite provably keeps valid — it is carried
+        commit, the pinned ``man``'s id returned. ``vidx`` (caller-judged)
+        is a vector index the rewrite provably keeps valid — it is carried
         into the new commit's stats. ``man`` is the caller's pinned
-        manifest (one op, one manifest); read here when absent."""
-        if not self.exists():
-            raise FileNotFoundError(f"no table at {self.path}")
-        # plan/publish pinned to ONE manifest (the upsert clobber
-        # window — see the comment there)
-        if man is None:
-            man = self._pin_head()
-        assert man is not None
+        manifest (one op, one manifest: plan and publish both read it)."""
         existing = self.read(spark, at=man.commit_id)
         cond = F.expr(predicate) if isinstance(predicate, str) else predicate
         hit = F.coalesce(cond, F.lit(False))
 
         if self.partition_by:
-            touched = {
-                self._dirname(r)
-                for r in existing.filter(hit)
-                .select(self.partition_by)
-                .distinct()
-                .collect()
-            }
+            touched = self._partition_dirs(existing.filter(hit))
             if not touched:
-                return self.commits()[-1]
+                return man.commit_id
             existing_touched = self._rows_in_partitions(existing, touched)
         else:
             if existing.filter(hit).isEmpty():
-                return self.commits()[-1]
+                return man.commit_id
             touched = None
             existing_touched = existing
 
@@ -4054,37 +3909,10 @@ class KeyedTable:
                     f"{op} would write rows violating CHECK "
                     f"constraint(s) {bad}"
                 )
-        stats = {"vector_index": vidx} if vidx is not None else {}
-        if self.change_log:
-            rewritten = rewritten.persist()
-        cid = M.child_id(man.commit_id)
-        new_files, nrows = self._write_index_aware(rewritten, cid, vidx)
-        chlog = self._write_change_log(
-            existing_touched, rewritten, existing.schema,
-            rows_written=nrows,
+        return self._publish_rewrite(
+            op, man, existing_touched, rewritten, touched, existing.schema,
+            vidx,
         )
-        if chlog is not None:
-            stats["change_log"] = chlog
-        if self.change_log:
-            rewritten.unpersist()
-        files = (
-            M.with_new_files(M.carried_files_arrow(man, touched), new_files)
-            if touched is not None
-            else new_files
-        )
-        self._commit(
-            op,
-            files,
-            existing.schema,
-            rows=nrows,
-            rewritten=sorted(touched) if touched is not None else ["<all>"],
-            extra_stats=stats or None,
-            cid=cid,
-            base=man if touched is not None else None,
-            touched=touched,
-            new_files=new_files,
-        )
-        return self.commits()[-1]
 
     def validate(self) -> list[str]:
         """Manifest/file integrity audit (operational tooling): returns a
@@ -4895,7 +4723,7 @@ class KeyedTable:
         # partition rewrites and duplicate rows.
         try:
             files, n = self._write_index_aware(snap, cid, vidx)
-            self._commit(
+            published = self._commit(
                 "change_partitioning",
                 files,
                 snap.schema,
@@ -4911,7 +4739,7 @@ class KeyedTable:
             self.partition_by = old_pb
             raise
         self.save_meta()
-        return self.commits()[-1]
+        return published
 
     def rollback(self, to_commit: str) -> str:
         """Restore the table to an earlier commit's state by publishing a
@@ -5082,7 +4910,6 @@ class KeyedTable:
         # plan/publish pinned to ONE manifest (the upsert clobber
         # window — see the comment there)
         man = self._pin_head()
-        assert man is not None
         existing = self.read(spark, at=man.commit_id)
         structural = set(self.key) | set(self.partition_by or []) | {
             self.precombine
@@ -5180,15 +5007,10 @@ class KeyedTable:
         # guide §5 — same rationale as upsert's batch persist): the
         # touched-partition probe, the full-outer merge, and the
         # conflict-only rebase key probe each re-ran the caller's whole
-        # source expression otherwise. Unpersisted on success below; a
-        # retried/failed attempt's handle is bounded by the persist
-        # registry (its eviction unpersists the oldest).
+        # source expression otherwise. Unpersisted in the finally.
         from pyspark import StorageLevel
 
-        from hudi_glue_spark.plans.persist_registry import register
-
-        source = register(
-            "mergeinto_source",
+        source = (
             self._precombine(source)
             .select(
                 [
@@ -5201,215 +5023,187 @@ class KeyedTable:
                 ]
                 + [F.col(c) for c in extras]
             )
-            .persist(StorageLevel.MEMORY_AND_DISK),
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        by_source = (
-            by_source_delete is not None
-            or by_source_update_set is not None
-        )
-        if self.partition_by and not by_source:
-            touched = self._touched_partitions(existing, source, man=man)
-            target = self._rows_in_partitions(existing, touched)
-        else:
-            # by-source clauses examine EVERY target row — the whole
-            # table is the target (see the docstring's cost contract)
-            touched = None
-            target = existing
-
-        t = target.withColumn("__t", F.lit(1)).alias("target")
-        s = source.withColumn("__s", F.lit(1)).alias("source")
-        # match on the ROW IDENTITY — key + partition columns under
-        # partition key scope, where a shared key in two partitions is
-        # two independent rows (r12, same contract as _merge/diff)
-        joined = t.join(
-            s,
-            on=[
-                t[k].eqNullSafe(s[k]) for k in self._identity_cols
-            ],
-            how="full_outer",
-        )
-        matched = F.col("target.__t").isNotNull() & F.col("source.__s").isNotNull()
-        target_only = F.col("source.__s").isNull()
-        source_only = F.col("target.__t").isNull()
-
-        if matched_clauses is not None:
-            # ordered first-wins evaluation (SQL WHEN semantics): a
-            # matched row takes the FIRST clause whose condition
-            # holds; rows no clause selects stay untouched
-            taken = F.lit(False)
-            del_c = F.lit(False)
-            upd_branches: list[tuple] = []  # (applies, set_dict|None)
-            for cl in matched_clauses:
-                c_expr = _cond(cl.get("condition"), F.lit(True))
-                applies = matched & c_expr & ~taken
-                taken = taken | (matched & c_expr)
-                if cl["action"] == "delete":
-                    del_c = del_c | applies
-                else:
-                    upd_branches.append((applies, cl.get("set")))
-            upd_c = F.lit(False)
-            for applies, _s in upd_branches:
-                upd_c = upd_c | applies
-        else:
-            del_c = matched & _cond(delete_condition, F.lit(False))
-            upd_c = (
-                matched & _cond(update_condition, F.lit(True)) & ~del_c
+        try:
+            by_source = (
+                by_source_delete is not None
+                or by_source_update_set is not None
             )
-            upd_branches = [(upd_c, update_set)]
-        ins_c = (
-            source_only
-            & F.lit(when_not_matched_insert)
-            & _cond(insert_condition, F.lit(True))
-        )
-        if by_source_delete is None:
-            bsd_c = F.lit(False)
-        elif by_source_delete is True:
-            bsd_c = target_only
-        else:
-            bsd_c = target_only & _cond(by_source_delete, F.lit(False))
-        bsu_c = (
-            target_only
-            & ~bsd_c
-            & F.lit(by_source_update_set is not None)
-            & _cond(by_source_update_condition, F.lit(True))
-        )
-        keep = (
-            (target_only & ~bsd_c) | upd_c | ins_c | (matched & ~del_c)
-        )
-        types = {f.name: f.dataType for f in existing.schema.fields}
+            if self.partition_by and not by_source:
+                touched = self._touched_partitions(existing, source, man=man)
+                target = self._rows_in_partitions(existing, touched)
+            else:
+                # by-source clauses examine EVERY target row — the whole
+                # table is the target (see the docstring's cost contract)
+                touched = None
+                target = existing
 
-        def upd_val(set_dict: dict | None, c: str):
-            if set_dict is None:  # full source-row replace
-                return F.col(f"source.{c}")
-            if c in set_dict:
-                return F.expr(set_dict[c]).cast(types[c])
-            return F.col(f"target.{c}")  # partial update keeps target
-
-        def ins_val(c: str):
-            if insert_values is None:
-                return F.col(f"source.{c}")
-            if c in insert_values:
-                return F.expr(insert_values[c]).cast(types[c])
-            if c in structural:  # key/partition/precombine: source
-                return F.col(f"source.{c}")
-            return F.lit(None).cast(types[c])  # SQL: unlisted = NULL
-
-        def bsu_val(c: str):
-            if by_source_update_set and c in by_source_update_set:
-                return F.expr(by_source_update_set[c]).cast(types[c])
-            return F.col(f"target.{c}")
-
-        partial = (
-            any(s is not None for _a, s in upd_branches)
-            or insert_values is not None
-            or by_source_update_set is not None
-        )
-
-        def row_val(c: str):
-            e = None
-            for applies, set_dict in upd_branches:
-                v = upd_val(set_dict, c)
-                e = F.when(applies, v) if e is None else e.when(applies, v)
-            for cond, v in ((ins_c, ins_val(c)), (bsu_c, bsu_val(c))):
-                e = F.when(cond, v) if e is None else e.when(cond, v)
-            return e.otherwise(F.col(f"target.{c}")).alias(c)
-
-        merged = joined.filter(keep).select(
-            *[row_val(c) for c in cols],
-            *(
-                [
-                    upd_c.alias("__upd"),
-                    ins_c.alias("__ins"),
-                    bsu_c.alias("__bsu"),
-                ]
-                if partial and self.derived_cols
-                else []
-            ),
-        )
-        if partial and self.derived_cols:
-            # generated columns recompute for the rows whose inputs
-            # this merge may have touched (same contract as
-            # update_where: the stored column never drifts from its
-            # rule; a recomputed partition key relocates on write)
-            touched_row = (
-                F.col("__upd") | F.col("__ins") | F.col("__bsu")
+            t = target.withColumn("__t", F.lit(1)).alias("target")
+            s = source.withColumn("__s", F.lit(1)).alias("source")
+            # match on the ROW IDENTITY — key + partition columns under
+            # partition key scope, where a shared key in two partitions is
+            # two independent rows (r12, same contract as _merge/diff)
+            joined = t.join(
+                s,
+                on=[
+                    t[k].eqNullSafe(s[k]) for k in self._identity_cols
+                ],
+                how="full_outer",
             )
-            for name, rule in self.derived_cols.items():
-                merged = merged.withColumn(
-                    name,
-                    F.when(touched_row, F.expr(rule)).otherwise(
-                        F.col(name)
-                    ),
+            matched = F.col("target.__t").isNotNull() & F.col("source.__s").isNotNull()
+            target_only = F.col("source.__s").isNull()
+            source_only = F.col("target.__t").isNull()
+
+            if matched_clauses is not None:
+                # ordered first-wins evaluation (SQL WHEN semantics): a
+                # matched row takes the FIRST clause whose condition
+                # holds; rows no clause selects stay untouched
+                taken = F.lit(False)
+                del_c = F.lit(False)
+                upd_branches: list[tuple] = []  # (applies, set_dict|None)
+                for cl in matched_clauses:
+                    c_expr = _cond(cl.get("condition"), F.lit(True))
+                    applies = matched & c_expr & ~taken
+                    taken = taken | (matched & c_expr)
+                    if cl["action"] == "delete":
+                        del_c = del_c | applies
+                    else:
+                        upd_branches.append((applies, cl.get("set")))
+                upd_c = F.lit(False)
+                for applies, _s in upd_branches:
+                    upd_c = upd_c | applies
+            else:
+                del_c = matched & _cond(delete_condition, F.lit(False))
+                upd_c = (
+                    matched & _cond(update_condition, F.lit(True)) & ~del_c
                 )
-            merged = merged.drop("__upd", "__ins", "__bsu")
-        vreg = (man.stats or {}).get("vector_index")
-        set_cols = set(by_source_update_set or {})
-        for _a, s in upd_branches:
-            set_cols |= set(s or {})
-        if vreg is not None and set_cols:
-            # a partial SET leaves the TARGET's assignment on the row
-            # (maintenance only assigns NULL rows) — a SET touching the
-            # index's columns would strand stale assignments, so drop
-            # honestly, same rule as update_where
-            icols = {vreg.get("vec_col"), vreg.get("cell_col")} | set(
-                vreg.get("bucket_cols") or []
+                upd_branches = [(upd_c, update_set)]
+            ins_c = (
+                source_only
+                & F.lit(when_not_matched_insert)
+                & _cond(insert_condition, F.lit(True))
             )
-            if icols & set_cols:
-                vreg = None
-        merged, maintained = self._maintain_vector_index(merged, vreg)
-        if self.change_log:
-            merged = merged.persist()
-        cid = M.child_id(man.commit_id)
-        new_files, nrows = self._write_index_aware(merged, cid, maintained)
-        chlog = self._write_change_log(
-            target, merged, existing.schema, rows_written=nrows
-        )
-        if self.change_log:
-            merged.unpersist()
-        files = (
-            M.with_new_files(M.carried_files_arrow(man, touched), new_files)
-            if touched is not None
-            else new_files
-        )
-        self._commit(
-            "merge_into",
-            files,
-            existing.schema,
-            base=man if touched is not None else None,
-            touched=touched,
-            new_files=new_files,
-            rows=nrows,
-            # delete-free merges qualify for the global-scope disjoint
-            # rebase; the proof runs against the SOURCE keys (lazy,
-            # conflict-only) because the staged files may omit
-            # source-only keys whose insert condition failed
-            # a by-source merge touches keys OUTSIDE the source, so the
-            # disjointness rebase proof (which runs over source keys)
-            # would be unsound — disable it; an OCC conflict re-merges
-            probe_keys_df=(
-                None if by_source else source.select(*self.key)
-            ),
-            delete_free=(
-                delete_condition is None
-                and by_source_delete is None
-                and not any(
-                    cl["action"] == "delete"
-                    for cl in (matched_clauses or [])
+            if by_source_delete is None:
+                bsd_c = F.lit(False)
+            elif by_source_delete is True:
+                bsd_c = target_only
+            else:
+                bsd_c = target_only & _cond(by_source_delete, F.lit(False))
+            bsu_c = (
+                target_only
+                & ~bsd_c
+                & F.lit(by_source_update_set is not None)
+                & _cond(by_source_update_condition, F.lit(True))
+            )
+            keep = (
+                (target_only & ~bsd_c) | upd_c | ins_c | (matched & ~del_c)
+            )
+            types = {f.name: f.dataType for f in existing.schema.fields}
+
+            def upd_val(set_dict: dict | None, c: str):
+                if set_dict is None:  # full source-row replace
+                    return F.col(f"source.{c}")
+                if c in set_dict:
+                    return F.expr(set_dict[c]).cast(types[c])
+                return F.col(f"target.{c}")  # partial update keeps target
+
+            def ins_val(c: str):
+                if insert_values is None:
+                    return F.col(f"source.{c}")
+                if c in insert_values:
+                    return F.expr(insert_values[c]).cast(types[c])
+                if c in structural:  # key/partition/precombine: source
+                    return F.col(f"source.{c}")
+                return F.lit(None).cast(types[c])  # SQL: unlisted = NULL
+
+            def bsu_val(c: str):
+                if by_source_update_set and c in by_source_update_set:
+                    return F.expr(by_source_update_set[c]).cast(types[c])
+                return F.col(f"target.{c}")
+
+            partial = (
+                any(s is not None for _a, s in upd_branches)
+                or insert_values is not None
+                or by_source_update_set is not None
+            )
+
+            def row_val(c: str):
+                e = None
+                for applies, set_dict in upd_branches:
+                    v = upd_val(set_dict, c)
+                    e = F.when(applies, v) if e is None else e.when(applies, v)
+                for cond, v in ((ins_c, ins_val(c)), (bsu_c, bsu_val(c))):
+                    e = F.when(cond, v) if e is None else e.when(cond, v)
+                return e.otherwise(F.col(f"target.{c}")).alias(c)
+
+            merged = joined.filter(keep).select(
+                *[row_val(c) for c in cols],
+                *(
+                    [
+                        upd_c.alias("__upd"),
+                        ins_c.alias("__ins"),
+                        bsu_c.alias("__bsu"),
+                    ]
+                    if partial and self.derived_cols
+                    else []
+                ),
+            )
+            if partial and self.derived_cols:
+                # generated columns recompute for the rows whose inputs
+                # this merge may have touched (same contract as
+                # update_where: the stored column never drifts from its
+                # rule; a recomputed partition key relocates on write)
+                touched_row = (
+                    F.col("__upd") | F.col("__ins") | F.col("__bsu")
                 )
-            ),
-            rewritten=sorted(touched) if touched is not None else ["<all>"],
-            extra_stats=(
-                {
-                    **(qstats or {}),
-                    **({"vector_index": maintained} if maintained is not None else {}),
-                    **({"change_log": chlog} if chlog is not None else {}),
-                }
-                or None
-            ),
-            cid=cid,
-        )
-        source.unpersist()
-        return self.commits()[-1]
+                for name, rule in self.derived_cols.items():
+                    merged = merged.withColumn(
+                        name,
+                        F.when(touched_row, F.expr(rule)).otherwise(
+                            F.col(name)
+                        ),
+                    )
+                merged = merged.drop("__upd", "__ins", "__bsu")
+            vreg = (man.stats or {}).get("vector_index")
+            set_cols = set(by_source_update_set or {})
+            for _a, s in upd_branches:
+                set_cols |= set(s or {})
+            if vreg is not None and set_cols:
+                # a partial SET leaves the TARGET's assignment on the row
+                # (maintenance only assigns NULL rows) — a SET touching the
+                # index's columns would strand stale assignments, so drop
+                # honestly, same rule as update_where
+                icols = {vreg.get("vec_col"), vreg.get("cell_col")} | set(
+                    vreg.get("bucket_cols") or []
+                )
+                if icols & set_cols:
+                    vreg = None
+            merged, maintained = self._maintain_vector_index(merged, vreg)
+            return self._publish_rewrite(
+                "merge_into", man, target, merged, touched, existing.schema,
+                maintained, qstats,
+                # delete-free merges qualify for the global-scope disjoint
+                # rebase; the proof runs against the SOURCE keys (lazy,
+                # conflict-only) because the staged files may omit
+                # source-only keys whose insert condition failed. A
+                # by-source merge touches keys OUTSIDE the source, so
+                # that proof would be unsound — disabled; an OCC conflict
+                # re-merges
+                probe_keys_df=(
+                    None if by_source else source.select(*self.key)
+                ),
+                delete_free=(
+                    delete_condition is None
+                    and by_source_delete is None
+                    and not any(
+                        cl["action"] == "delete"
+                        for cl in (matched_clauses or [])
+                    )
+                ),
+            )
+        finally:
+            source.unpersist()
 
     # -- savepoints (↦ Hudi savepoint/restore) -----------------------------
 
@@ -6184,7 +5978,7 @@ class KeyedTable:
         new_files, nrows = self._write_index_aware(
             binned, cid, vidx, repartition=False
         )
-        self._commit(
+        return self._commit(
             "optimize",
             M.with_new_files(
                 M.carried_files_arrow(man, set(todo)), new_files
@@ -6198,7 +5992,6 @@ class KeyedTable:
             extra_stats={"vector_index": vidx} if vidx is not None else None,
             cid=cid,
         )
-        return self.commits()[-1]
 
     def run_clustering(
         self,
@@ -6483,7 +6276,7 @@ class KeyedTable:
             )
             if icols & set(cols):
                 vidx = None
-        self._commit(
+        published = self._commit(
             "drop_columns",
             man.files,
             new_schema,
@@ -6500,7 +6293,7 @@ class KeyedTable:
             (self.wanted_indexes or {}).get("columns") or []
         ):
             self._want_index("column", c, want=False)
-        return self.commits()[-1]
+        return published
 
     def add_columns(self, cols: dict[str, str]) -> str:
         """Metadata-only column ADD (the Iceberg add-column idiom,
@@ -6549,7 +6342,7 @@ class KeyedTable:
                 ) from e
             new_fields.append(StructField(name, dt, True))
         vidx = (man.stats or {}).get("vector_index")
-        self._commit(
+        return self._commit(
             "add_columns",
             man.files,
             StructType(new_fields),
@@ -6560,7 +6353,6 @@ class KeyedTable:
             },
             cid=M.child_id(man.commit_id),
         )
-        return self.commits()[-1]
 
     def _retired_columns(self, man: "M.Manifest | None" = None) -> set[str]:
         """Union of all column names ever dropped — these may never be
@@ -6641,7 +6433,7 @@ class KeyedTable:
         try:
             cid = M.child_id(man_pin.commit_id)
             files, nrows = self._write_files(clustered, cid, repartition=False)
-            self._commit(
+            return self._commit(
                 "index",
                 files,
                 clustered.schema,
@@ -6658,7 +6450,6 @@ class KeyedTable:
             )
         finally:
             self.stats_cols = prev_stats
-        return self.commits()[-1]
 
     LSH_BUCKET_PREFIX = "__lshb"
 
@@ -6723,7 +6514,7 @@ class KeyedTable:
         ).sortWithinPartitions(bucket_cols[0])
         cid = M.child_id(man_pin.commit_id)
         files, nrows = self._write_files(clustered, cid, repartition=False)
-        self._commit(
+        return self._commit(
             "index",
             files,
             clustered.schema,
@@ -6741,7 +6532,6 @@ class KeyedTable:
                 }
             },
         )
-        return self.commits()[-1]
 
     def _maintain_vector_index(self, df: DataFrame, vidx: dict | None):
         """Keep the previous commit's ANN index LIVE across a mutating
@@ -6942,6 +6732,14 @@ class KeyedTable:
         assert self.partition_by
         return "/".join(M.hive_dirname(c, row[c]) for c in self.partition_by)
 
+    def _partition_dirs(self, df: DataFrame) -> set[str]:
+        """Hive dir names of the partitions ``df``'s rows live in (one
+        distinct collect)."""
+        return {
+            self._dirname(r)
+            for r in df.select(self.partition_by).distinct().collect()
+        }
+
     def _touched_partitions(
         self,
         existing: DataFrame,
@@ -6954,12 +6752,7 @@ class KeyedTable:
         if self.key_scope == "partition":
             # Keys are partition-local: only the batch's own partitions
             # can hold prior versions — no global probe.
-            return {
-                self._dirname(r)
-                for r in batch.select(self.partition_by)
-                .distinct()
-                .collect()
-            }
+            return self._partition_dirs(batch)
         # Global key scope: an update may move a key across partitions
         # (the reference's day=1 batch rewrites the partition column
         # itself, glue/NYTaxiDataPrep.py:47) — old hosts must be
@@ -6990,12 +6783,16 @@ class KeyedTable:
                     batch.select(self.key[0]).dropDuplicates(),
                     man,
                 )
-                parts = {
-                    self._dirname(r)
-                    for r in batch.select(self.partition_by)
-                    .distinct()
-                    .collect()
-                }
+                try:
+                    parts = self._partition_dirs(batch)
+                except Exception as e:
+                    # still retrieve the probe's outcome, so its failure
+                    # is chained onto this one instead of discarded
+                    try:
+                        fut.result()
+                    except Exception as probe_err:
+                        raise e from probe_err
+                    raise
                 hosts = fut.result()
             if hosts is not None:
                 return parts | {
@@ -7133,6 +6930,62 @@ class KeyedTable:
         shutil.rmtree(stage, ignore_errors=True)
         return moved, nrows
 
+    def _publish_rewrite(
+        self,
+        op: str,
+        man: "M.Manifest",
+        prior: DataFrame,
+        out: DataFrame,
+        touched: set[str] | None,
+        schema: StructType,
+        vidx: dict | None,
+        extra_stats: dict | None = None,
+        probe_keys_df=None,
+        delete_free: bool = False,
+    ) -> str:
+        """The copy-on-write tail every rewrite op shares: write ``out``
+        as the new contents of the ``touched`` partitions (None = the
+        whole table) under the child id of the pinned ``man``, record
+        the ``prior`` → ``out`` change log, carry every untouched file
+        forward, and publish ``op``. ``vidx`` is the vector-index
+        registration ``out`` keeps valid. Returns the published id."""
+        # change_log: persist the output so the file write and the
+        # exceptAll delta share ONE evaluation (measured ~2x op cost
+        # without the cache)
+        if self.change_log:
+            out = out.persist()
+        try:
+            cid = M.child_id(man.commit_id)
+            new_files, nrows = self._write_index_aware(out, cid, vidx)
+            chlog = self._write_change_log(
+                prior, out, schema, rows_written=nrows
+            )
+        finally:
+            if self.change_log:
+                out.unpersist()
+        stats = {
+            **(extra_stats or {}),
+            **({"vector_index": vidx} if vidx is not None else {}),
+            **({"change_log": chlog} if chlog is not None else {}),
+        }
+        scoped = touched is not None
+        return self._commit(
+            op,
+            M.with_new_files(M.carried_files_arrow(man, touched), new_files)
+            if scoped
+            else new_files,
+            schema,
+            rows=nrows,
+            rewritten=sorted(touched) if scoped else ["<all>"],
+            extra_stats=stats or None,
+            cid=cid,
+            base=man if scoped else None,
+            touched=touched,
+            new_files=new_files,
+            probe_keys_df=probe_keys_df,
+            delete_free=delete_free,
+        )
+
     def _commit(
         self,
         op: str,
@@ -7148,7 +7001,9 @@ class KeyedTable:
         probe_keys_df=None,
         delete_free: bool = False,
         dvs: dict | None = None,
-    ) -> None:
+    ) -> str:
+        """Publish one commit; returns the id it published (the planned
+        ``cid``, or the rebased id when a disjoint-rival rebase won)."""
         # Inline stats cover ONLY the files this commit just wrote;
         # carried-forward files keep their stats inside the manifest
         # shards write_manifest reuses (or recovers from broken shards)
@@ -7320,15 +7175,15 @@ class KeyedTable:
                 touched_dirs=touched,
                 new_files=new_files,
             )
-            self._refresh_live_views()
-            return
         except M.ConcurrentCommitError:
-            if not self._rebase_commit(
+            commit_id = self._rebase_commit(
                 op, man, base, touched, new_files or [], fstats, frows,
                 fblooms, fbytes, probe_keys_df, delete_free,
-            ):
+            )
+            if commit_id is None:
                 raise
-            self._refresh_live_views()
+        self._refresh_live_views()
+        return commit_id
 
     # Ops whose rebase is key-safe regardless of key_scope: they never
     # introduce or remove keys, only re-arrange existing rows/files.
@@ -7480,7 +7335,7 @@ class KeyedTable:
     def _rebase_commit(
         self, op, man, base, touched, new_files, fstats, frows, fblooms,
         fbytes, probe_keys_df=None, delete_free=False,
-    ) -> bool:
+    ) -> str | None:
         """DISJOINT-COMMIT REBASE (Hudi/Delta OCC conflict-resolution
         parity): a writer that loses the commit race re-publishes its
         ALREADY-STAGED files against the rival's head — skipping the
@@ -7502,7 +7357,8 @@ class KeyedTable:
 
         At 100 TB this is what lets N writers on N different partitions
         commit concurrently at merge-once cost instead of serializing
-        re-merges. Returns True when a rebase published."""
+        re-merges. Returns the rebased commit id, or None when no rebase
+        published."""
         if op in ("delete_dv", "upsert_dv", "update_where_dv"):
             # DV DML never rebases: its commit scope is touched=∅ (the
             # file set is unchanged), so the partition-overlap audit
@@ -7511,9 +7367,9 @@ class KeyedTable:
             # worse, a rival that rewrote the marked files invalidates
             # the positions themselves. Re-running the whole op is
             # cheap by construction (it's O(delta)); callers retry.
-            return False
+            return None
         if base is None or touched is None:
-            return False
+            return None
         key_span = None  # set ⇒ global-scope rebase via key-range proof
         need_key_proof = (
             op not in self._REBASE_SAFE_OPS
@@ -7545,9 +7401,9 @@ class KeyedTable:
             if op == "upsert":
                 key_span = self._staged_key_span(fstats, new_files)
             elif not (op == "merge_into" and delete_free):
-                return False
+                return None
             if key_span is None and probe_keys_df is None:
-                return False  # no provable span and no probe keys
+                return None  # no provable span and no probe keys
         my_schema = man.schema_json
         my_stats = man.stats
         probe_keys: list | None = None  # lazy; [] = unprovable
@@ -7575,7 +7431,7 @@ class KeyedTable:
                     or rs.get("vector_index")
                     != (base.stats or {}).get("vector_index")
                 ):
-                    return False
+                    return None
                 if need_key_proof and rs.get("dv_changed"):
                     # a rival DV commit deleted/superseded rows WITHOUT
                     # adding files, so the file-diff-based key proofs
@@ -7584,7 +7440,7 @@ class KeyedTable:
                     # rows. Re-merge (partition-scoped writers are
                     # already safe: the partitions_rewritten overlap
                     # check above saw the rival's DV'd dirs).
-                    return False
+                    return None
                 if need_key_proof:
                     ok = key_span is not None and self._chain_key_disjoint(
                         r, parent, key_span
@@ -7606,7 +7462,7 @@ class KeyedTable:
                                 r, parent, probe_keys
                             )
                         ):
-                            return False
+                            return None
                 parent = r
             # carry the HEAD's deletion vectors for the files this
             # rebase keeps: rivals may have DV'd rows in partitions
@@ -7678,10 +7534,10 @@ class KeyedTable:
                     touched_dirs=touched,
                     new_files=new_files,
                 )
-                return True
+                return rebased.commit_id
             except M.ConcurrentCommitError:
                 continue  # another rival landed; re-audit and retry
-        return False
+        return None
 
 
 def ingest(table: KeyedTable, batch: DataFrame) -> str:

@@ -1189,6 +1189,30 @@ def test_bloom_poly_no_false_negatives_property():
     prop()
 
 
+def test_bloom_poly_mixed_length_batch_matches_per_key_hash():
+    """One long key in a batch of short ones: every (h1, h2) pair is
+    bit-identical to hashing that key alone (so existing poly1 blooms
+    still probe correctly), and the batch no longer allocates an
+    n × max_len matrix (40k × 10 KB × 8 bytes ≈ 3 GB)."""
+    import tracemalloc
+
+    import numpy as np
+
+    from hudi_glue_spark.table import bloom as B
+
+    keys = [f"k{i}" for i in range(40_000)] + ["é" * 5_000]  # 10 KB
+    tracemalloc.start()
+    try:
+        batch = B._poly_pairs_np(keys)
+        _cur, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 64 * 2**20
+    alone = np.concatenate([B._poly_pairs_np([k]) for k in keys])
+    assert batch.dtype == alone.dtype == np.uint64
+    assert np.array_equal(batch, alone)
+
+
 def test_bloom_no_false_negatives_property():
     """Hypothesis: for ANY key set (arbitrary unicode, dups, empties),
     every inserted key probes positive — false negatives are impossible
@@ -2092,3 +2116,138 @@ def test_merge_condition_on_source_only_column(spark, tmp_path):
     rows = {r["pk"]: r["val"] for r in t.read(spark).collect()}
     assert rows == {1: "u1", 3: "init3", 4: "init4", 9: "n9"}
     assert "op" not in t.read(spark).columns
+
+
+# -- every op returns the commit id it published -----------------------------
+
+_RETURNED_ID_OPS = {
+    "upsert": lambda t, spark: t.upsert(
+        spark.createDataFrame(
+            [Row(pk=1, part="a", val="u1", update_ts=ts(11))]
+        )
+    ),
+    "delete": lambda t, spark: t.delete(spark.createDataFrame([Row(pk=1)])),
+    "update_where": lambda t, spark: t.update_where(
+        spark, {"val": "'u1'"}, "pk = 1"
+    ),
+    "merge_into": lambda t, spark: t.merge_into(
+        spark.createDataFrame(
+            [Row(pk=1, part="a", val="m1", update_ts=ts(11))]
+        )
+    ),
+    "insert_overwrite": lambda t, spark: t.insert_overwrite(
+        spark.createDataFrame(
+            [Row(pk=1, part="a", val="o1", update_ts=ts(11))]
+        )
+    ),
+}
+
+
+def _rival_upsert(spark, path, pk):
+    """A second writer's upsert into partition ``z`` (disjoint from the
+    ``a``/``b`` partitions the ops under test rewrite)."""
+    KeyedTable.load(path).upsert(
+        spark.createDataFrame(
+            [Row(pk=pk, part="z", val=f"rival{pk}", update_ts=ts(12))]
+        )
+    )
+
+
+def _after_publish_rival(spark, t):
+    """Hook ``t``'s post-publish refresh: record the head ``t`` just
+    published, then let a rival upsert land before ``t``'s op returns."""
+    from hudi_glue_spark.table import manifest as M
+
+    seen: dict = {}
+    orig = t._refresh_live_views
+
+    def hook():
+        orig()
+        if not seen:
+            seen["published"] = M.list_commit_ids(t.path)[-1]
+            _rival_upsert(spark, t.path, 100)
+            seen["rival"] = M.list_commit_ids(t.path)[-1]
+
+    t._refresh_live_views = hook
+    return seen
+
+
+@pytest.mark.parametrize("op", sorted(_RETURNED_ID_OPS))
+def test_op_returns_its_own_commit_id_despite_rival(spark, tmp_path, op):
+    """A rival commit landing between an op's publish and its return
+    must not leak into the op's return value."""
+    from hudi_glue_spark.table import manifest as M
+
+    t = KeyedTable(
+        str(tmp_path / "t"), key="pk", precombine="update_ts",
+        partition_by="part",
+    )
+    t.bulk_insert(day0(spark))
+    seen = _after_publish_rival(spark, t)
+    rid = _RETURNED_ID_OPS[op](t, spark)
+    assert seen["rival"] != seen["published"]
+    assert rid == seen["published"]
+    assert M.read_manifest(t.path, rid).op == op
+
+
+@pytest.mark.parametrize("op", sorted(_RETURNED_ID_OPS))
+def test_op_returns_rebased_commit_id(spark, tmp_path, op):
+    """Under partition key scope a rival on a disjoint partition that
+    wins the publish race forces a rebase: the op returns the REBASED
+    id, not its planned child id (and not a later rival's id)."""
+    from hudi_glue_spark.table import manifest as M
+
+    t = KeyedTable(
+        str(tmp_path / "t"), key="pk", precombine="update_ts",
+        partition_by="part", key_scope="partition",
+    )
+    t.bulk_insert(day0(spark))
+    planned = M.child_id(M.list_commit_ids(t.path)[-1])
+    orig_commit = t._commit
+
+    def racing_commit(*a, **kw):
+        _rival_upsert(spark, t.path, 99)  # takes the planned id
+        return orig_commit(*a, **kw)
+
+    t._commit = racing_commit
+    seen = _after_publish_rival(spark, t)
+    rid = _RETURNED_ID_OPS[op](t, spark)
+    man = M.read_manifest(t.path, rid)
+    assert M.read_manifest(t.path, planned).op == "upsert"  # the rival
+    assert rid != planned and rid == seen["published"]
+    assert man.op == op and "rebased_onto" in man.stats
+
+
+def test_touched_partitions_chains_probe_failure(spark, tmp_path):
+    """The threaded record-index probe's failure is never discarded:
+    when the main-thread partition collect fails too, the raised error
+    carries the probe's error in its cause/context chain."""
+    t = KeyedTable(
+        str(tmp_path / "t"), key="pk", precombine="update_ts",
+        partition_by="part",
+    )
+    t.bulk_insert(day0(spark))
+    t.build_record_index(spark)
+
+    class ProbeBoom(RuntimeError):
+        pass
+
+    def probe_fails(*_a, **_kw):
+        raise ProbeBoom("index probe failed")
+
+    def collect_fails(_df):
+        raise ValueError("partition collect failed")
+
+    t.files_hosting_keys = probe_fails
+    t._partition_dirs = collect_fails
+    with pytest.raises(ValueError, match="partition collect failed") as ei:
+        t.upsert(
+            spark.createDataFrame(
+                [Row(pk=1, part="a", val="u1", update_ts=ts(11))]
+            )
+        )
+    chain, e = [], ei.value
+    while e is not None and len(chain) < 10:
+        chain.append(e)
+        e = e.__cause__ or e.__context__
+    assert any(isinstance(x, ProbeBoom) for x in chain)
