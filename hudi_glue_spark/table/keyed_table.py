@@ -2423,12 +2423,18 @@ class KeyedTable:
     def upsert(self, batch: DataFrame, extra_stats: dict | None = None) -> str:
         """Incremental merge (§2a #23, the flagship).
 
-        (a) precombine-dedup the batch per key; (b) discover touched
-        partitions (batch's own + partitions holding matched keys — the
-        key scope is global, like Hudi's GLOBAL index); (c) merge with
-        the live rows of ONLY those partitions per the late-data policy;
-        (d) rewrite those partitions' files and publish a manifest that
-        carries every untouched file forward.
+        (a) tag each batch row with its precombine tie-break hash and
+        materialize the conformed batch ONCE (a local checkpoint read
+        by every later step); (b) discover touched partitions (batch's
+        own + partitions holding matched keys — the key scope is
+        global, like Hudi's GLOBAL index); (c) merge with the live rows
+        of ONLY those partitions per the late-data policy, in one
+        window that also resolves the batch's duplicate keys — over
+        live rows ∪ batch (event_time_wins), or over the batch alone,
+        live rows of its keys dropped by an anti-join (arrival_wins);
+        no separate precombine pass; (d) rewrite those
+        partitions' files and publish a manifest that carries every
+        untouched file forward.
         """
         if not self.exists():
             # the fallback must not drop the caller's commit stats —
@@ -2451,7 +2457,10 @@ class KeyedTable:
         if qstats is not None:
             extra_stats = {**(extra_stats or {}), **qstats}
         spark = batch.sparkSession
-        batch = self._precombine(batch)
+        # the precombine tie-break, hashed on the batch as enforced —
+        # the same value _precombine orders by — and carried through
+        # the conform as __tie for _merge's window
+        tie = self._row_hash(batch)
         existing = self.read(spark, at=man.commit_id)
         # Schema evolution (Hudi parity):
         # - add-column: batch columns not in the table are appended as
@@ -2502,6 +2511,7 @@ class KeyedTable:
                 for f in existing.schema.fields
             ],
             *[F.col(f.name) for f in new_fields],
+            tie.alias("__tie"),
         )
         if new_fields:
             existing = existing.select(
@@ -2509,18 +2519,29 @@ class KeyedTable:
                 *[F.lit(None).cast(f.dataType).alias(f.name) for f in new_fields],
             )
 
-        # Persist the conformed batch for the op's lifetime (r16, guide
-        # §5): the batch lineage (precombine window over the caller's
-        # source expression) is consumed by the touched-partition
-        # probe, the merge write, and — on an OCC conflict — the rebase
-        # key probe; unpersisted, each job re-ran the whole source
-        # subtree (measured: two ~0.5 s 33-task stages per probe on
-        # merge_into_disjoint_rebase at sf0.1). The batch is the
-        # incremental DELTA — bounded by contract — and memory-then-
-        # disk spills rather than OOMs; unpersisted in the finally.
+        # Materialize the conformed batch ONCE, eagerly, for the op's
+        # lifetime: the touched-partition probe, the merge write, and —
+        # on an OCC conflict — the rebase key probe all read the same
+        # rows as a plain RDD scan. Unmaterialized, each job re-ran the
+        # caller's source subtree (measured: two ~0.5 s 33-task stages
+        # per probe on merge_into_disjoint_rebase at sf0.1), and a
+        # nondeterministic source could write rows into a partition the
+        # probe never marked touched. A local checkpoint (not persist):
+        # the batch appears on both sides of the probe plan, and AQE
+        # gives each cached-relation stage its own fill job, while the
+        # checkpoint is filled by exactly one. The trade-off: checkpoint
+        # blocks have no lineage, so if an executor holding some is
+        # lost mid-op (spot reclaim, OOM kill) the next read of the
+        # batch fails instead of recomputing them, and the upsert
+        # raises with nothing published — the caller re-runs it
+        # (``retry_commit`` re-runs only lost OCC races). The batch is
+        # the incremental DELTA — bounded by contract — and memory-
+        # then-disk spills rather than OOMs; released in the finally.
         from pyspark import StorageLevel
 
-        batch = batch.persist(StorageLevel.MEMORY_AND_DISK)
+        batch = batch.localCheckpoint(
+            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+        )
         try:
             if self.partition_by:
                 touched = self._touched_partitions(existing, batch, man=man)
@@ -2546,7 +2567,7 @@ class KeyedTable:
                 probe_keys_df=batch.select(*self.key),
             )
         finally:
-            batch.unpersist()
+            self._release_checkpoint(batch)
 
     def retry_commit(
         self,
@@ -3206,8 +3227,10 @@ class KeyedTable:
         Semantics match :meth:`upsert` per policy — EVENT_TIME_WINS:
         the per-key max-``precombine`` row wins, batch beats base on
         ties, a stale batch row loses silently; ARRIVAL_WINS: the batch
-        replaces matched keys unconditionally. Batches with duplicate
-        merge keys are resolved per policy before merging. Falls back
+        replaces matched keys unconditionally. Duplicate merge keys
+        within a batch resolve as in :meth:`upsert` — the
+        max-``precombine`` row, ties broken by :meth:`_row_hash` —
+        whatever the input order. Falls back
         to the rewrite upsert for: new tables (bulk_insert) and schema
         evolution (column set differs). A VECTOR INDEX is maintained
         in place (SURVEY §9c#2): surviving base rows keep their stored
@@ -3224,6 +3247,8 @@ class KeyedTable:
         self._require_columns(batch, "upsert_dv batch")
         schema = StructType.fromJson(json.loads(man.schema_json))
         vidx = (man.stats or {}).get("vector_index")
+        names = {f.name for f in schema.fields}
+        fill: set[str] = set()
         if vidx is not None:
             # index columns the batch doesn't carry are NULL-filled so
             # maintenance can assign them (the rewrite upsert's evolve
@@ -3233,104 +3258,99 @@ class KeyedTable:
                 if vidx.get("kind") == "ivf"
                 else list(vidx.get("bucket_cols") or [])
             )
-            by_name = {f.name: f for f in schema.fields}
-            for c in icols:
-                if c in by_name and c not in batch.columns:
-                    batch = batch.withColumn(
-                        c, F.lit(None).cast(by_name[c].dataType)
-                    )
-        if set(batch.columns) != {f.name for f in schema.fields}:
+            fill = (set(icols) & names) - set(batch.columns)
+        if set(batch.columns) | fill != names:
             return self.upsert(batch, extra_stats=extra_stats)
         spark = batch.sparkSession
-        batch = batch.select(
-            [F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
+        # duplicate keys resolve exactly as upsert resolves them: the
+        # batch as given is precombined (same row-hash tie-break), then
+        # conformed to the table schema
+        best = self._precombine(batch).select(
+            [
+                (F.col(f.name) if f.name in batch.columns else F.lit(None))
+                .cast(f.dataType)
+                .alias(f.name)
+                for f in schema.fields
+            ]
         )
-        merge_keys = self._identity_cols
-        if self.policy == ARRIVAL_WINS:
-            best = batch.dropDuplicates(merge_keys)
-        else:
-            w = Window.partitionBy(*merge_keys).orderBy(
-                F.desc(self.precombine)
-            )
-            best = (
-                batch.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
         best = best.localCheckpoint()  # reused by probe + write + marks
-        cand = self._dv_candidate_files(man, best)
-        cid = M.child_id(man.commit_id)
-        need = [*merge_keys, self.precombine]
-        ex = (
-            self._positioned_read(
-                spark, man, cand, columns=list(dict.fromkeys(need))
+        try:
+            merge_keys = self._identity_cols
+            cand = self._dv_candidate_files(man, best)
+            cid = M.child_id(man.commit_id)
+            need = [*merge_keys, self.precombine]
+            ex = (
+                self._positioned_read(
+                    spark, man, cand, columns=list(dict.fromkeys(need))
+                )
+                if cand
+                else None
             )
-            if cand
-            else None
-        )
-        if ex is None:
-            append, marked = best, None
-        elif self.policy == ARRIVAL_WINS:
-            marked = ex.join(
-                best.select(*merge_keys).dropDuplicates(),
-                on=merge_keys,
-                how="left_semi",
+            if ex is None:
+                append, marked = best, None
+            elif self.policy == ARRIVAL_WINS:
+                marked = ex.join(
+                    best.select(*merge_keys).dropDuplicates(),
+                    on=merge_keys,
+                    how="left_semi",
+                )
+                append = best
+            else:
+                j = ex.join(
+                    best.select(
+                        *merge_keys, F.col(self.precombine).alias("__bpc")
+                    ),
+                    on=merge_keys,
+                    how="inner",
+                )
+                # base row loses on ties (mirror _merge's __src desc order)
+                marked = j.filter(F.col(self.precombine) <= F.col("__bpc"))
+                stale = j.filter(
+                    F.col(self.precombine) > F.col("__bpc")
+                ).select(*merge_keys)
+                append = best.join(stale, on=merge_keys, how="left_anti")
+            # maintain a live ANN index on the APPEND side only: survivors'
+            # assignments sit untouched in their (un-rewritten) files
+            append, maintained = self._maintain_vector_index(append, vidx)
+            new_files, nrows = self._write_index_aware(append, cid, maintained)
+            entries, total = (
+                self._dv_entries(spark, man, marked, cid)
+                if marked is not None
+                else ({}, 0)
             )
-            append = best
-        else:
-            j = ex.join(
-                best.select(
-                    *merge_keys, F.col(self.precombine).alias("__bpc")
-                ),
-                on=merge_keys,
-                how="inner",
+            dirs = sorted(
+                {
+                    *self._dv_rewritten_dirs(entries),
+                    *self._dv_rewritten_dirs(new_files),
+                }
             )
-            # base row loses on ties (mirror _merge's __src desc order)
-            marked = j.filter(F.col(self.precombine) <= F.col("__bpc"))
-            stale = j.filter(F.col(self.precombine) > F.col("__bpc")).select(
-                *merge_keys
+            return self._commit(
+                "upsert_dv",
+                M.with_new_files(man.files_arrow(), new_files),
+                schema,
+                rows=nrows,
+                rewritten=dirs,
+                extra_stats={
+                    **(extra_stats or {}),
+                    **(
+                        {"vector_index": maintained}
+                        if maintained is not None
+                        else {}
+                    ),
+                    **(
+                        {"dv_changed": True, "dv_rows_marked": total}
+                        if entries
+                        else {}
+                    ),
+                },
+                cid=cid,
+                base=man,
+                touched=set(),
+                new_files=new_files,
+                dvs=entries,
             )
-            append = best.join(stale, on=merge_keys, how="left_anti")
-        # maintain a live ANN index on the APPEND side only: survivors'
-        # assignments sit untouched in their (un-rewritten) files
-        append, maintained = self._maintain_vector_index(append, vidx)
-        new_files, nrows = self._write_index_aware(append, cid, maintained)
-        entries, total = (
-            self._dv_entries(spark, man, marked, cid)
-            if marked is not None
-            else ({}, 0)
-        )
-        dirs = sorted(
-            {
-                *self._dv_rewritten_dirs(entries),
-                *self._dv_rewritten_dirs(new_files),
-            }
-        )
-        return self._commit(
-            "upsert_dv",
-            M.with_new_files(man.files_arrow(), new_files),
-            schema,
-            rows=nrows,
-            rewritten=dirs,
-            extra_stats={
-                **(extra_stats or {}),
-                **(
-                    {"vector_index": maintained}
-                    if maintained is not None
-                    else {}
-                ),
-                **(
-                    {"dv_changed": True, "dv_rows_marked": total}
-                    if entries
-                    else {}
-                ),
-            },
-            cid=cid,
-            base=man,
-            touched=set(),
-            new_files=new_files,
-            dvs=entries,
-        )
+        finally:
+            self._release_checkpoint(best)
 
     def export_masked_positions(self, dest: str | None = None) -> str:
         """Write the HEAD snapshot's dead (file, pos) pairs as one
@@ -6673,13 +6693,20 @@ class KeyedTable:
 
     # -- internals ---------------------------------------------------------
 
-    def _precombine(self, df: DataFrame) -> DataFrame:
-        """Within-batch dedup: keep the max-precombine row per ROW
-        IDENTITY (§2a #23a) — the record key, or (partition, key)
-        under partition key scope (Hudi's non-global-index dedup
-        semantics: the same key in two partitions is two rows, r12
-        fix) — deterministically tie-broken by a row hash. Map
-        columns — at ANY depth, r12 nested lift — enter the hash
+    @staticmethod
+    def _release_checkpoint(df: DataFrame) -> None:
+        """Drop the blocks of ``df``, a ``localCheckpoint`` result.
+        ``DataFrame.unpersist`` does not reach the checkpoint's RDD —
+        it would stay registered for the session's lifetime — so the
+        RDD under the analyzed plan is unpersisted directly. A later
+        use of ``df`` fails loudly (the blocks are gone) instead of
+        silently recomputing."""
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+    def _row_hash(self, df: DataFrame) -> Column:
+        """The within-batch tie-break among equal-precombine rows of
+        one ROW IDENTITY: an xxhash64 of the whole row, higher wins.
+        Map columns — at ANY depth, r12 nested lift — enter the hash
         through their recursive canonical twin (:meth:`_canon_expr`):
         Spark prohibits hashing raw maps (entry order varies per
         plan), and the canonical form is exactly the order-insensitive
@@ -6691,15 +6718,18 @@ class KeyedTable:
                 return c
             return self._canon_expr(c, f.dataType)
 
+        return F.xxhash64(
+            F.struct(*[hcol(f).alias(f.name) for f in df.schema.fields])
+        )
+
+    def _precombine(self, df: DataFrame) -> DataFrame:
+        """Within-batch dedup: keep the max-precombine row per ROW
+        IDENTITY (§2a #23a) — the record key, or (partition, key)
+        under partition key scope (Hudi's non-global-index dedup
+        semantics: the same key in two partitions is two rows, r12
+        fix) — deterministically tie-broken by :meth:`_row_hash`."""
         w = Window.partitionBy(*self._identity_cols).orderBy(
-            F.desc(self.precombine),
-            F.desc(
-                F.xxhash64(
-                    F.struct(
-                        *[hcol(f).alias(f.name) for f in df.schema.fields]
-                    )
-                )
-            ),
+            F.desc(self.precombine), F.desc(self._row_hash(df))
         )
         return (
             df.withColumn("__rn", F.row_number().over(w))
@@ -6708,25 +6738,41 @@ class KeyedTable:
         )
 
     def _merge(self, existing: DataFrame, batch: DataFrame) -> DataFrame:
-        # Under partition key scope, row identity is (partition, key):
-        # the same key may live in two partitions as two rows.
-        merge_keys = self._identity_cols
-        if self.policy == ARRIVAL_WINS:
-            # Incoming batch replaces matched keys unconditionally.
-            return existing.join(batch, on=merge_keys, how="left_anti").unionByName(batch)
-        # EVENT_TIME_WINS: newest precombine wins; ties go to the batch.
+        """One row per ROW IDENTITY of ``existing`` ∪ ``batch``, ranked
+        by ONE window — (precombine, batch over existing, tie), all
+        descending — that also resolves the batch's own duplicates, so
+        the batch is never shuffled for a separate :meth:`_precombine`.
+        ``batch`` carries its :meth:`_row_hash` as ``__tie`` (taken
+        before the schema conform, so winners are those ``_precombine``
+        would pick). EVENT_TIME_WINS ranks existing ∪ batch.
+        ARRIVAL_WINS: the batch replaces matched identities
+        unconditionally, so only the batch is ranked and existing rows
+        of its identities leave by an anti-join — AQE can broadcast the
+        small batch, and existing rows are not shuffled by key (ranking
+        the union shuffled them: +50% records shuffled per commit on
+        the ``upsert_arrival_wins`` scenario). Under partition key
+        scope, row identity is (partition, key): the same key may live
+        in two partitions as two rows."""
+        keys = self._identity_cols
         cols = existing.columns
-        union = existing.withColumn("__src", F.lit(0)).unionByName(
-            batch.withColumn("__src", F.lit(1))
+        batch = batch.withColumn("__src", F.lit(1))
+        if self.policy == ARRIVAL_WINS:
+            kept = existing.join(batch.select(*keys), on=keys, how="left_anti")
+            ranked = batch
+        else:
+            kept = None
+            ranked = existing.withColumns(
+                {"__src": F.lit(0), "__tie": F.lit(0).cast(LongType())}
+            ).unionByName(batch)
+        w = Window.partitionBy(*keys).orderBy(
+            *[F.desc(c) for c in (self.precombine, "__src", "__tie")]
         )
-        w = Window.partitionBy(*merge_keys).orderBy(
-            F.desc(self.precombine), F.desc("__src")
-        )
-        return (
-            union.withColumn("__rn", F.row_number().over(w))
+        winners = (
+            ranked.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .select(cols)
         )
+        return winners if kept is None else kept.unionByName(winners)
 
     def _dirname(self, row) -> str:
         assert self.partition_by
@@ -6820,8 +6866,9 @@ class KeyedTable:
         # (~0.2-0.3 s of fixed cost per tiny job on local[32];
         # measured 0.83 s/probe on merge_into_disjoint_rebase, ~7 jobs
         # of the row's 37). The semi-join key dedup was redundant
-        # work: every caller precombines the batch before probing, and
-        # a semi-join is insensitive to probe-side duplicates anyway.
+        # work: a semi-join is insensitive to probe-side duplicates, so
+        # the batch probes as given (``upsert`` resolves its duplicates
+        # later, in ``_merge``).
         old_parts = existing.join(
             batch.select(self.key), on=self.key, how="left_semi"
         ).select(self.partition_by)

@@ -10,6 +10,7 @@ policies.
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import Row
@@ -2251,3 +2252,284 @@ def test_touched_partitions_chains_probe_failure(spark, tmp_path):
         chain.append(e)
         e = e.__cause__ or e.__context__
     assert any(isinstance(x, ProbeBoom) for x in chain)
+
+
+# -- upsert batch resolution: one shuffle, one materialization ------------
+
+
+def _snapshot(spark, t, cols=("pk", "part", "val", "update_ts")):
+    return sorted(tuple(r) for r in t.read(spark).select(*cols).collect())
+
+
+@pytest.mark.parametrize("reverse", [False, True], ids=["fwd", "rev"])
+@pytest.mark.parametrize("policy", [EVENT_TIME_WINS, ARRIVAL_WINS])
+def test_upsert_dv_resolves_duplicate_keys_like_upsert(
+    spark, tmp_path, policy, reverse
+):
+    """upsert_dv picks the same winner among a batch's duplicate keys
+    as upsert, whatever the input order: the max-precombine row, and
+    on an equal-precombine tie the row-hash winner."""
+    rows = [
+        Row(pk=1, part="a", val="lo", update_ts=ts(11)),
+        Row(pk=1, part="a", val="hi", update_ts=ts(12)),
+        Row(pk=3, part="b", val="tie_x", update_ts=ts(11)),
+        Row(pk=3, part="b", val="tie_y", update_ts=ts(11)),
+    ]
+    if reverse:
+        rows = rows[::-1]
+    snaps = {}
+    for op in ("upsert", "upsert_dv"):
+        t = KeyedTable(
+            str(tmp_path / op), key="pk", precombine="update_ts",
+            partition_by="part", policy=policy,
+        )
+        t.bulk_insert(day0(spark))
+        getattr(t, op)(spark.createDataFrame(rows).coalesce(1))
+        snaps[op] = _snapshot(spark, t)
+    assert snaps["upsert_dv"] == snaps["upsert"]
+    assert {r[0]: r[2] for r in snaps["upsert"]}[1] == "hi"
+
+
+@pytest.mark.parametrize("policy", [EVENT_TIME_WINS, ARRIVAL_WINS])
+def test_upserts_leave_no_persisted_rdd(spark, tmp_path, policy):
+    """upsert and upsert_dv release the batch they materialize: no RDD
+    either op persisted is still registered once it returns. Compared
+    by id, not by count: the registry holds its RDDs weakly, so a GC
+    during the op may drop an earlier test's unreferenced entry."""
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    t = KeyedTable(
+        str(tmp_path / "t"), key="pk", precombine="update_ts",
+        partition_by="part", policy=policy,
+    )
+    t.bulk_insert(day0(spark))
+    for op, batch in ((t.upsert, day1(spark)), (t.upsert_dv, day2(spark))):
+        before = persisted()
+        op(batch)
+        assert persisted() <= before, op.__name__
+
+
+def test_steady_upsert_job_count(spark, tmp_path):
+    """A steady-state upsert into a partitioned, key_bloom, global-scope
+    table runs 7 Spark jobs: 1 fills the batch's local checkpoint, 3
+    probe the touched partitions (broadcast, distinct shuffle, result)
+    and 3 write (merge shuffle, repartition shuffle, write). A separate
+    precombine shuffle of the batch, or a cached batch filled once per
+    place it appears in the probe plan, shows as extra jobs. The batch
+    comes from pandas, whose size statistics let the probe plan its
+    semi-join as a broadcast up front."""
+    import pandas as pd
+
+    sc = spark.sparkContext
+    t = KeyedTable(
+        str(tmp_path / "t"), key="pk", precombine="update_ts",
+        partition_by="part", key_bloom=True,
+    )
+    t.bulk_insert(
+        spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "pk": range(60),
+                    "part": [f"d{i % 6}" for i in range(60)],
+                    "val": [f"v{i}" for i in range(60)],
+                    "update_ts": [ts(10)] * 60,
+                }
+            )
+        )
+    )
+
+    def batch(day):
+        pks = list(range(0, 60, 5)) + [60 + day]
+        return spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "pk": pks,
+                    "part": [f"d{pk % 2}" for pk in pks],
+                    "val": [f"u{day}" for _ in pks],
+                    "update_ts": [ts(day)] * len(pks),
+                }
+            )
+        )
+
+    t.upsert(batch(11))  # warm-up: the first upsert of the table
+    jobs = _jobs_of(sc, f"steady-upsert-{tmp_path.name}", t.upsert, batch(12))
+    assert len(jobs) == 7
+
+
+def _jobs_of(sc, group, fn, *args):
+    """Ids of the Spark jobs ``fn(*args)`` runs, counted under a job
+    group once the listener bus has drained."""
+    sc.setJobGroup(group, group)
+    try:
+        fn(*args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_arrival_wins_upsert_shuffles_existing_rows_once(spark, tmp_path):
+    """Under arrival_wins the batch replaces matched identities
+    unconditionally, so existing rows of the touched partitions leave
+    the merge by an anti-join against the (broadcast) batch instead of
+    being ranked with it: they are shuffled once, by the write's
+    repartition, not also by key. Ranking existing ∪ batch in one
+    window would shuffle every touched existing row twice."""
+    import pandas as pd
+
+    sc = spark.sparkContext
+    t = KeyedTable(
+        str(tmp_path / "t"), key="pk", precombine="update_ts",
+        partition_by="part", policy=ARRIVAL_WINS,
+    )
+    t.bulk_insert(
+        spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "pk": range(600),
+                    "part": [f"d{i % 6}" for i in range(600)],
+                    "val": [f"v{i}" for i in range(600)],
+                    "update_ts": [ts(10)] * 600,
+                }
+            )
+        )
+    )
+
+    def batch(day):
+        # 12 updates of keys in d0/d1 (kept in place), one insert in d0
+        pks = [pk for pk in range(36) if pk % 6 < 2] + [600 + 6 * day]
+        return spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "pk": pks,
+                    "part": [f"d{pk % 6}" for pk in pks],
+                    "val": [f"u{day}" for _ in pks],
+                    "update_ts": [ts(day)] * len(pks),
+                }
+            )
+        )
+
+    t.upsert(batch(11))  # warm-up: the first upsert of the table
+    jobs = _jobs_of(sc, f"aw-upsert-{tmp_path.name}", t.upsert, batch(12))
+    store = sc._jsc.sc().statusStore()
+    shuffled = sum(
+        store.lastStageAttempt(s).shuffleWriteRecords()
+        for j in jobs
+        for s in sc.statusTracker().getJobInfo(j).stageIds
+    )
+    existing = 201  # d0 + d1 before the upsert: 200 + the warm-up insert
+    written = t.read(spark).filter(F_col("part").isin("d0", "d1")).count()
+    assert written == existing + 1
+    assert shuffled < existing + written
+
+
+class _TwoStepUpsert(KeyedTable):
+    """upsert with its batch resolved in two steps: ``_precombine`` the
+    batch on its own, then merge per policy — an anti-join + union
+    (arrival_wins) or a (precombine, source) window (event_time_wins).
+    A reference for batches already in the table's schema, where the
+    conform leaves the hashed columns as they were."""
+
+    def _merge(self, existing, batch):
+        from pyspark.sql import functions as F
+        from pyspark.sql.window import Window
+
+        batch = self._precombine(batch.drop("__tie"))
+        keys = self._identity_cols
+        if self.policy == ARRIVAL_WINS:
+            return existing.join(batch, on=keys, how="left_anti").unionByName(
+                batch
+            )
+        union = existing.withColumn("__src", F.lit(0)).unionByName(
+            batch.withColumn("__src", F.lit(1))
+        )
+        w = Window.partitionBy(*keys).orderBy(
+            F.desc(self.precombine), F.desc("__src")
+        )
+        return (
+            union.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .select(existing.columns)
+        )
+
+
+def _tie_batches(spark):
+    """Two upsert batches full of duplicate row identities and
+    equal-precombine ties: within the batch, against the table, across
+    partitions (a key in two partitions: one identity under global
+    scope, two under partition scope), older than the table, and new."""
+    b1 = [
+        Row(pk=1, part="a", val="x", update_ts=ts(11)),
+        Row(pk=1, part="a", val="y", update_ts=ts(11)),
+        Row(pk=1, part="a", val="z", update_ts=ts(11)),
+        Row(pk=2, part="a", val="same_a", update_ts=ts(10)),
+        Row(pk=2, part="b", val="same_b", update_ts=ts(10)),
+        Row(pk=3, part="b", val="old_x", update_ts=ts(5)),
+        Row(pk=3, part="b", val="old_y", update_ts=ts(5)),
+        Row(pk=40, part="c", val="new_x", update_ts=ts(12)),
+        Row(pk=40, part="c", val="new_y", update_ts=ts(12)),
+    ]
+    b2 = [
+        Row(pk=1, part="b", val="moved_x", update_ts=ts(11)),
+        Row(pk=1, part="b", val="moved_y", update_ts=ts(11)),
+        Row(pk=40, part="c", val="late", update_ts=ts(6)),
+        Row(pk=40, part="c", val="new_z", update_ts=ts(12)),
+        Row(pk=5, part="a", val="p", update_ts=ts(10)),
+        Row(pk=5, part="a", val="q", update_ts=ts(10)),
+    ]
+    return [spark.createDataFrame(b).repartition(3) for b in (b1, b2)]
+
+
+def _change_log(spark, t):
+    from hudi_glue_spark.table import manifest as M
+
+    ref = M.read_manifest(t.path).stats["change_log"]["ref"]
+    return sorted(
+        tuple(r)
+        for r in spark.read.parquet(os.path.join(t.path, "_changes", ref))
+        .select("pk", "part", "val", "update_ts", "_change_type")
+        .collect()
+    )
+
+
+@pytest.mark.parametrize(
+    "policy,key_scope,change_log",
+    [
+        (EVENT_TIME_WINS, "global", False),
+        (EVENT_TIME_WINS, "partition", False),
+        (ARRIVAL_WINS, "global", False),
+        (ARRIVAL_WINS, "partition", False),
+        (EVENT_TIME_WINS, "global", True),
+    ],
+)
+def test_folded_precombine_matches_two_step_reference(
+    spark, tmp_path, policy, key_scope, change_log
+):
+    """upsert resolves the batch's duplicates inside its merge window;
+    every winner — equal-precombine ties included — and every recorded
+    change-log row equal those of the two-step reference."""
+    base = spark.createDataFrame(
+        [
+            Row(pk=i, part="ab"[i % 2], val=f"init{i}", update_ts=ts(10))
+            for i in range(1, 31)
+        ]
+    )
+    tables = []
+    for cls in (KeyedTable, _TwoStepUpsert):
+        t = cls(
+            str(tmp_path / cls.__name__), key="pk", precombine="update_ts",
+            partition_by="part", policy=policy, key_scope=key_scope,
+            change_log=change_log,
+        )
+        t.bulk_insert(base)
+        tables.append(t)
+    for batch in _tie_batches(spark):
+        for t in tables:
+            t.upsert(batch)
+        got, want = (_snapshot(spark, t) for t in tables)
+        assert got == want
+        if change_log:
+            got, want = (_change_log(spark, t) for t in tables)
+            assert got and got == want
