@@ -154,7 +154,7 @@ def _two_batch_table(spark: SparkSession, sf_dir: str) -> KeyedTable:
         key="event_id",
         precombine="ts",
         partition_by="event_type",
-        key_bloom=True,  # point_lookup_keys reads through the sidecars
+        key_bloom=True,  # point_lookup_keys probes the manifest blooms
     )
     b0, b1, _b2 = _batches(spark, sf_dir)
     ingest(tbl, b0)
@@ -1437,7 +1437,7 @@ def q_point_lookup_keys(spark, sf_dir):
     """Key point lookup through the per-file Bloom index (Hudi
     bloom-index parity, table/bloom.py): 32 scattered event_ids fetched
     from the two-batch table via read_keys, which opens only files whose
-    sidecar may hold a probe — min/max stats can't prune scattered keys,
+    manifest bloom may hold a probe — min/max stats can't prune scattered keys,
     which is exactly why Hudi blooms them. The oracle filters the merged
     state by the same IN list; bloom false positives cost I/O only, so
     the results must match row-for-row."""
@@ -1502,7 +1502,7 @@ _PRUNE_CACHE: dict[str, KeyedTable] = {}
 
 def _pruned_table(spark: SparkSession, sf_dir: str) -> KeyedTable:
     """events bulk-loaded range-clustered on event_id (8 files, tight
-    per-file min/max in the manifest, bloom sidecars) — the layout where
+    per-file min/max and key blooms in the manifest) — the layout where
     point/range reads can prove file skipping at any SF."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     from hudi_glue_spark.table import manifest as M
@@ -1561,7 +1561,7 @@ def q_sql_pruned_point_range(spark, sf_dir):
     read family): the same key IN-list and range predicate evaluated
     (a) through the registered SQL view — Catalyst pushes the predicate
     into the parquet scan — and (b) through the manifest-pruned Python
-    API (read_keys via bloom sidecars, read_isin / read_range via
+    API (read_keys via manifest blooms, read_isin / read_range via
     manifest min/max), which must agree row-for-row AND provably open
     fewer files than the table holds. The booleans convert the pruning
     claim into a driver fact: point_scan_pruned/isin_scan_pruned/
@@ -2492,7 +2492,7 @@ def q_occ_disjoint_rebase(spark, sf_dir):
         .withColumn("value", F.col("value") * 2)
     )
     cid = M.child_id(base_man.commit_id)
-    staged, nrows = tbl._write_index_aware(victim_rows, cid, None)
+    staged = tbl._write_index_aware(victim_rows, cid, None)
 
     # …meanwhile the RIVAL publishes its 'view' rewrite first
     rival = KeyedTable.load(root)
@@ -2507,12 +2507,11 @@ def q_occ_disjoint_rebase(spark, sf_dir):
         "upsert",
         M.with_new_files(M.carried_files_arrow(base_man, touched), staged),
         tbl.read(spark).schema,
-        rows=nrows,
+        staged,
         rewritten=sorted(touched),
         cid=cid,
         base=base_man,
         touched=touched,
-        new_files=staged,
     )
     head = M.read_manifest(root)
     rebased = "rebased_onto" in (head.stats or {})
@@ -2711,8 +2710,8 @@ def q_merge_into_disjoint_rebase(spark, sf_dir):
     orig = KeyedTable._write_files
     fired: dict = {}
 
-    def hook(self, df, cid, repartition=True):
-        out = orig(self, df, cid, repartition)
+    def hook(self, *args, **kwargs):
+        out = orig(self, *args, **kwargs)
         if self.path == root and not fired:
             fired["x"] = 1
             KeyedTable._write_files = orig

@@ -3,20 +3,25 @@
 The reference's upsert relies on Hudi's bloom index to tag incoming
 records against existing file groups (implied by the upsert operation,
 glue/HudiJarGlueJob.py:83; Hudi stores the filters in parquet footers).
-Here each data file gets a ``<file>.bloom`` sidecar built from the key
-column(s) at write time, and :meth:`KeyedTable.read_keys` consults the
-sidecars to prune files BEFORE any scan — a point lookup on a 100 TB
-table opens only the files that may hold the key, typically one per
-partition, instead of every file min/max overlap would admit (keys are
-usually scattered, so min/max pruning is useless for them — exactly why
-Hudi uses blooms and not range stats for its index).
+Here each data file's filter is built from the key column(s) at write
+time and stored once, as the ``bloom`` bytes of the file's row in the
+manifest shard (:func:`to_bytes` / :func:`from_bytes`), and
+:meth:`KeyedTable.read_keys` probes the filters to prune files BEFORE
+any scan — a point lookup on a 100 TB table opens only the files that
+may hold the key, typically one per partition, instead of every file
+min/max overlap would admit (keys are usually scattered, so min/max
+pruning is useless for them — exactly why Hudi uses blooms and not
+range stats for its index).
 
 False positives only (a pruned-in file may lack the key — the exact
-filter after the scan settles it); a MISSING sidecar keeps the file, so
-false negatives are impossible by construction. Sidecars are internal
-metadata: hashes only need to be stable within this library, so md5 of
-the stringified key is fine (and engine-portable if anything else ever
-wants to read them).
+filter after the scan settles it); a file with NO manifest bloom is
+kept, so false negatives are impossible by construction. Tables written
+before the filters moved into the manifest may still hold
+``.<file>.bloom`` JSON files in their data dirs: nothing reads them, and
+``clean()`` removes them as unreferenced files. Filters are internal
+metadata: hashes only need to be stable within this library, so a
+self-contained hash of the stringified key is fine (and engine-portable
+if anything else ever wants to read them).
 """
 
 from __future__ import annotations
@@ -25,8 +30,6 @@ import base64
 import datetime
 import decimal
 import hashlib
-import json
-import os
 
 import numpy as np
 
@@ -37,7 +40,7 @@ NUM_PROBES = 7
 #: Hash family NEW filters are built with. Every filter RECORDS its
 #: family ("h" in the dict; the pad field of the binary shard form), and
 #: every probe hashes with the filter's OWN family — so filters
-#: persisted under the legacy md5 family (pre-r16 sidecars/shards, e.g.
+#: persisted under the legacy md5 family (pre-r16 shards, e.g.
 #: disk-revalidated fixtures) keep their no-false-negative guarantee
 #: forever. "poly1" is a fully vectorized numpy construction (~20× less
 #: per-key Python than the md5 loop, which cProfile put at ~0.3 s per
@@ -45,9 +48,6 @@ NUM_PROBES = 7
 #: byte-for-byte reproducible from this file, no library hash whose
 #: cross-version stability we'd be betting row correctness on.
 BLOOM_HASH = "poly1"
-
-SIDECAR_SUFFIX = ".bloom"
-
 
 def _canon_value(v) -> str:
     """Canonical string for ONE key value. The write side hashes pyarrow
@@ -322,7 +322,7 @@ def contains_any_hashed(bloom: dict, hashes) -> bool:
     if hashes.shape[0] == 0:
         return False
     arr = _decode(bloom)
-    # probe with the sidecar's OWN k — a filter written under a
+    # probe with the filter's OWN k — a filter written under a
     # different NUM_PROBES must keep its no-false-negative guarantee
     bits = _probe_bits(hashes, bloom["m"], bloom["k"])
     hit = (
@@ -341,7 +341,7 @@ def contains_any(bloom: dict, keys: list[str]) -> bool:
     """True iff the filter may hold ANY of ``keys``. Decodes the bit
     array ONCE and tests all keys vectorized — the per-(key, file) form
     (:func:`maybe_contains`) re-decodes per call, which dominates when a
-    lookup probes many keys against many sidecars."""
+    lookup probes many keys against many files' filters."""
     if not keys:
         return False
     return contains_any_hashed(
@@ -351,45 +351,3 @@ def contains_any(bloom: dict, keys: list[str]) -> bool:
 
 def maybe_contains(bloom: dict, key: str) -> bool:
     return contains_any(bloom, [key])
-
-
-def sidecar_path(data_file_path: str) -> str:
-    """Sidecar location for a data file: HIDDEN (dot-prefixed) next to
-    it — ``part=a/.f1.parquet.bloom`` for ``part=a/f1.parquet``. The
-    dot matters: ``data/`` must stay scannable by ANY engine pointed
-    straight at it (Spark skips ``.``/``_``-prefixed files natively,
-    DuckDB/Trino globs match ``*.parquet`` only), so non-parquet
-    sidecars may never be visible names in a data directory."""
-    d, base = os.path.split(data_file_path)
-    return os.path.join(d, "." + base + SIDECAR_SUFFIX)
-
-
-def is_sidecar(name: str) -> bool:
-    """True for sidecar basenames/relpaths, hidden or legacy layout."""
-    return name.endswith(SIDECAR_SUFFIX)
-
-
-def sidecar_base(rel: str) -> str:
-    """Data-file relpath a sidecar relpath belongs to (inverse of
-    :func:`sidecar_path`, also accepting the pre-r9 unhidden name)."""
-    d, base = os.path.split(rel)
-    base = base[: -len(SIDECAR_SUFFIX)]
-    if base.startswith("."):
-        base = base[1:]
-    return os.path.join(d, base) if d else base
-
-
-def write_sidecar(data_file_path: str, keys: list[str]) -> None:
-    with open(sidecar_path(data_file_path), "w") as f:
-        json.dump(build(keys), f)
-
-
-def read_sidecar(data_file_path: str) -> dict | None:
-    p = sidecar_path(data_file_path)
-    if not os.path.exists(p):
-        # pre-r9 layout: unhidden `<file>.bloom` next to the data file
-        p = data_file_path + SIDECAR_SUFFIX
-        if not os.path.exists(p):
-            return None
-    with open(p) as f:
-        return json.load(f)

@@ -176,10 +176,10 @@ class KeyedTable:
     #: file skipping (None → the precombine column). At 100 TB this is
     #: the difference between scanning a time slice and the whole table.
     stats_cols: list[str] | None = None
-    #: write a per-file key Bloom sidecar (table/bloom.py — Hudi
-    #: bloom-index parity) so :meth:`read_keys` point lookups open only
-    #: files that may hold the key. Opt-in: costs one key-column read
-    #: per written file at commit time.
+    #: record a per-file key Bloom filter in the manifest shard
+    #: (table/bloom.py — Hudi bloom-index parity) so :meth:`read_keys`
+    #: point lookups open only files that may hold the key. Opt-in:
+    #: costs one key-column read per written file at commit time.
     key_bloom: bool = False
     #: CHECK constraints enforced on every incoming batch (Delta
     #: ``ADD CONSTRAINT`` / DLT-expectation parity): name → SQL boolean
@@ -247,20 +247,6 @@ class KeyedTable:
             self.stats_cols = [self.precombine]
         elif isinstance(self.stats_cols, str):
             self.stats_cols = [self.stats_cols]
-        # staging area for footer stats / row counts gathered by
-        # _write_files until _commit publishes them (not a dataclass
-        # field: per-instance transient)
-        self._pending_stats: dict = {}
-        self._pending_rows: dict = {}
-        self._pending_blooms: dict = {}
-        self._pending_bytes: dict = {}
-        # decoded bloom sidecars by data-file name. Data files are
-        # immutable once committed (rewrites produce NEW names), so a
-        # decoded sidecar never goes stale; caching turns repeated
-        # point lookups from O(total files) small-file JSON I/O into
-        # dict hits. Missing sidecars are NOT cached (one may be
-        # written between probe and commit).
-        self._bloom_cache: dict = {}
         # live temp-view registrations ({name: SparkSession}) refreshed
         # after every successful commit — the hive_sync parity gap
         # VERDICT r13 "What's missing" #2: a registered view must see
@@ -964,11 +950,7 @@ class KeyedTable:
             if "bytes" not in df.columns:
                 df = df.withColumn("bytes", F.lit(None).cast("long"))
             return df.select("*", part)
-        rows = M._stats_rows(
-            man.files,
-            lambda f: man.file_stats.get(f),
-            lambda f: man.file_rows.get(f),
-        )
+        rows = M._stats_rows(man.files, man._file_meta)
         enc = [
             (f, c, n, by, bl,
              *(M._encode(mm[0]) if mm else (None, None, None)),
@@ -1011,37 +993,32 @@ class KeyedTable:
         return self._read_pruned(spark, man, keep, schema).filter(cond)
 
     def files_with_keys(self, keys: list, man=None) -> list[str]:
-        """Files whose Bloom sidecar may hold ANY of the (single-column)
-        ``keys``; files without a sidecar are kept, never skipped — so
-        a missing/stale bloom can cause extra scanning, never a missed
-        row. ``man`` pins the snapshot (same race rule)."""
+        """Files whose manifest key bloom may hold ANY of the
+        (single-column) ``keys``; files without a manifest bloom are
+        kept, never skipped — so a missing bloom can cause extra
+        scanning, never a missed row. ``man`` pins the snapshot (same
+        race rule)."""
         if man is None:
             man = M.read_manifest(self.path)
         assert man is not None
-        ddir = M.data_dir(self.path)
         # hash the probe set ONCE — probing P files with K keys was
         # P×K md5s before r15, now K per hash family present; the
         # canonicalization is bulk arrow too (r16)
         want = B.hash_pairs(B.key_strings_values(keys))
-        # fast path: blooms from the manifest shards — ONE columnar
-        # metadata load for the whole snapshot, no per-file sidecar
-        # opens (at 800k files the sidecar walk is 800k tiny reads)
-        shard_blooms = man.file_blooms if man.shards is not None else {}
-        keep: list[str] = []
-        for f in man.files:
-            bl = shard_blooms.get(f) or self._bloom_cache.get(f)
-            if bl is None:
-                bl = B.read_sidecar(os.path.join(ddir, f))
-                if bl is not None:
-                    self._bloom_cache[f] = bl
-            if bl is None or B.contains_any_hashed(bl, want):
-                keep.append(f)
-        return keep
+        # blooms from the manifest shards: ONE columnar metadata load
+        # for the whole snapshot, no per-file opens
+        blooms = man.file_blooms
+        return [
+            f
+            for f in man.files
+            if (bl := blooms.get(f)) is None
+            or B.contains_any_hashed(bl, want)
+        ]
 
     def read_keys(self, spark: SparkSession, keys: list) -> DataFrame:
         """Point lookup: rows whose record key is in ``keys``, opening
-        only files whose Bloom sidecar may hold one of them (plus any
-        file without a sidecar). The exact IN filter is re-applied after
+        only files whose manifest key bloom may hold one of them (plus
+        any file without one). The exact IN filter is re-applied after
         the scan, so bloom false positives cost I/O, never correctness.
 
         This is the read-side face of Hudi's bloom index: on a 100 TB
@@ -1174,12 +1151,10 @@ class KeyedTable:
             "record_index",
             man.files_arrow(),
             schema,
-            rows=0,
             cid=cid,
             extra_stats={"record_index": reg},
             base=man,
             touched=set(),
-            new_files=[],
         )
         self._want_index("record_index")
         return published
@@ -1196,11 +1171,9 @@ class KeyedTable:
             "drop_record_index",
             man.files_arrow(),
             schema,
-            rows=0,
             extra_stats={"record_index": None},
             base=man,
             touched=set(),
-            new_files=[],
         )
         self._want_index("record_index", want=False)
         return published
@@ -1608,12 +1581,10 @@ class KeyedTable:
             "record_index_compact",
             man.files_arrow(),
             schema,
-            rows=0,
             cid=cid,
             extra_stats={"record_index": new_reg},
             base=man,
             touched=set(),
-            new_files=[],
         )
 
     # -- secondary column indexes (value → file; Hudi 1.0 parity) ----------
@@ -1669,12 +1640,10 @@ class KeyedTable:
             "column_index",
             man.files_arrow(),
             schema,
-            rows=0,
             cid=cid,
             extra_stats={"column_indexes": {**prev_ci, col: reg}},
             base=man,
             touched=set(),
-            new_files=[],
         )
         self._want_index("column", col)
         return published
@@ -1689,7 +1658,6 @@ class KeyedTable:
             "drop_column_index",
             man.files_arrow(),
             schema,
-            rows=0,
             extra_stats={
                 "column_indexes": {
                     c: r for c, r in prev_ci.items() if c != col
@@ -1697,7 +1665,6 @@ class KeyedTable:
             },
             base=man,
             touched=set(),
-            new_files=[],
         )
         self._want_index("column", col, want=False)
         return published
@@ -1746,12 +1713,10 @@ class KeyedTable:
             "column_index_compact",
             man.files_arrow(),
             schema,
-            rows=0,
             cid=cid,
             extra_stats={"column_indexes": {**prev_ci, col: new_reg}},
             base=man,
             touched=set(),
-            new_files=[],
         )
 
     def _index_segment_names(
@@ -2026,8 +1991,9 @@ class KeyedTable:
             if f.name in pcols
         )
         part = f"PARTITIONED BY ({pcol_defs})" if pcols else ""
-        # pathGlobFilter: bloom sidecars (*.parquet.bloom) live next to
-        # the data files — the raw scan must not read their footers
+        # pathGlobFilter: tables written before key blooms moved into
+        # the manifest may still hold *.parquet.bloom files next to the
+        # data until clean() — the raw scan must not read them
         spark.sql(
             f"CREATE EXTERNAL TABLE {name}__files ({cols}) USING PARQUET "
             f"OPTIONS (pathGlobFilter '*.parquet') "
@@ -2174,7 +2140,7 @@ class KeyedTable:
         n_bad = row["__n"]
         if not n_bad:
             return batch, None
-        # Per-writer random token, like _write_files/_write_shard: two
+        # Per-writer random token, like _write_files' data files: two
         # writers racing the same planned commit id must not target the
         # same quarantine dir — with a shared name + overwrite, the
         # loser's violator rows would be silently clobbered, breaking
@@ -2269,7 +2235,7 @@ class KeyedTable:
             df = self._precombine(df)
         self.save_meta()
         cid = M.next_commit_id(self.path)
-        files, nrows = self._write_files(df, cid)
+        written = self._write_files(df, cid)
         declared = (
             {"unsafe_duplicate_keys": True}
             if unique_keys is False and not dedupe
@@ -2277,9 +2243,9 @@ class KeyedTable:
         )
         return self._commit(
             "bulk_insert",
-            files,
+            list(written),
             df.schema,
-            rows=nrows,
+            written,
             extra_stats={
                 **(extra_stats or {}),
                 **(qstats or {}),
@@ -2317,7 +2283,7 @@ class KeyedTable:
             )
         self.save_meta()
         cid = M.next_commit_id(self.path)
-        return self._commit("create", [], schema, rows=0, cid=cid)
+        return self._commit("create", [], schema, cid=cid)
 
     def validate_unique_keys(self, spark: SparkSession) -> int:
         """Distributed audit of the unique-row-identity invariant
@@ -3139,18 +3105,18 @@ class KeyedTable:
         )
         if not entries:
             return None
-        new_files, nrows = self._write_index_aware(updated, cid, vidx)
+        written = self._write_index_aware(updated, cid, vidx)
         dirs = sorted(
             {
                 *self._dv_rewritten_dirs(entries),
-                *self._dv_rewritten_dirs(new_files),
+                *self._dv_rewritten_dirs(written),
             }
         )
         return self._commit(
             "update_where_dv",
-            M.with_new_files(man.files_arrow(), new_files),
+            M.with_new_files(man.files_arrow(), written),
             schema,
-            rows=nrows,
+            written,
             rewritten=dirs,
             extra_stats={
                 "predicate": predicate,
@@ -3161,7 +3127,6 @@ class KeyedTable:
             cid=cid,
             base=man,
             touched=set(),
-            new_files=new_files,
             dvs=entries,
         )
 
@@ -3178,7 +3143,6 @@ class KeyedTable:
             op,
             man.files_arrow(),
             schema,
-            rows=0,
             rewritten=self._dv_rewritten_dirs(entries),
             extra_stats={
                 **(extra_stats or {}),
@@ -3189,7 +3153,6 @@ class KeyedTable:
             cid=cid,
             base=man,
             touched=set(),
-            new_files=[],
             dvs=entries,
         )
 
@@ -3230,7 +3193,8 @@ class KeyedTable:
         replaces matched keys unconditionally. Duplicate merge keys
         within a batch resolve as in :meth:`upsert` — the
         max-``precombine`` row, ties broken by :meth:`_row_hash` —
-        whatever the input order. Falls back
+        whatever the input order. Generated columns and CHECK
+        constraints apply as in :meth:`upsert`. Falls back
         to the rewrite upsert for: new tables (bulk_insert) and schema
         evolution (column set differs). A VECTOR INDEX is maintained
         in place (SURVEY §9c#2): surviving base rows keep their stored
@@ -3242,8 +3206,9 @@ class KeyedTable:
         :meth:`upsert_with_retry`; a lost race raises
         ``ConcurrentCommitError``."""
         if not self.exists():
-            return self.bulk_insert(batch, dedupe=True)
+            return self.bulk_insert(batch, dedupe=True, extra_stats=extra_stats)
         man = self._pin_head()
+        batch = self._derive(batch)
         self._require_columns(batch, "upsert_dv batch")
         schema = StructType.fromJson(json.loads(man.schema_json))
         vidx = (man.stats or {}).get("vector_index")
@@ -3261,6 +3226,9 @@ class KeyedTable:
             fill = (set(icols) & names) - set(batch.columns)
         if set(batch.columns) | fill != names:
             return self.upsert(batch, extra_stats=extra_stats)
+        batch, qstats = self._enforce(batch, "upsert_dv")
+        if qstats is not None:
+            extra_stats = {**(extra_stats or {}), **qstats}
         spark = batch.sparkSession
         # duplicate keys resolve exactly as upsert resolves them: the
         # batch as given is precombined (same row-hash tie-break), then
@@ -3312,7 +3280,7 @@ class KeyedTable:
             # maintain a live ANN index on the APPEND side only: survivors'
             # assignments sit untouched in their (un-rewritten) files
             append, maintained = self._maintain_vector_index(append, vidx)
-            new_files, nrows = self._write_index_aware(append, cid, maintained)
+            written = self._write_index_aware(append, cid, maintained)
             entries, total = (
                 self._dv_entries(spark, man, marked, cid)
                 if marked is not None
@@ -3321,14 +3289,14 @@ class KeyedTable:
             dirs = sorted(
                 {
                     *self._dv_rewritten_dirs(entries),
-                    *self._dv_rewritten_dirs(new_files),
+                    *self._dv_rewritten_dirs(written),
                 }
             )
             return self._commit(
                 "upsert_dv",
-                M.with_new_files(man.files_arrow(), new_files),
+                M.with_new_files(man.files_arrow(), written),
                 schema,
-                rows=nrows,
+                written,
                 rewritten=dirs,
                 extra_stats={
                     **(extra_stats or {}),
@@ -3346,7 +3314,6 @@ class KeyedTable:
                 cid=cid,
                 base=man,
                 touched=set(),
-                new_files=new_files,
                 dvs=entries,
             )
         finally:
@@ -3462,11 +3429,9 @@ class KeyedTable:
             "drop_partitions",
             keep,
             StructType.fromJson(json.loads(man.schema_json)),
-            rows=0,
             rewritten=sorted(drop),
             base=man,
             touched=drop,
-            new_files=[],
             extra_stats={
                 "dropped_partitions": sorted(drop),
                 **({"vector_index": vidx} if vidx is not None else {}),
@@ -3573,7 +3538,6 @@ class KeyedTable:
             "truncate",
             [],
             schema,
-            rows=0,
             rewritten=["<all>"],
             cid=cid,
         )
@@ -4012,12 +3976,8 @@ class KeyedTable:
         for dirpath, _dirs, files in os.walk(ddir):
             for fn in files:
                 rel = os.path.relpath(os.path.join(dirpath, fn), ddir)
-                if fn.endswith(".parquet") and rel not in referenced:
+                if rel not in referenced:
                     problems.append(f"orphan file (cleanable): {rel}")
-                if fn.endswith(B.SIDECAR_SUFFIX):
-                    data_rel = B.sidecar_base(rel)
-                    if data_rel not in referenced:
-                        problems.append(f"orphan bloom sidecar (cleanable): {rel}")
         if os.path.isdir(mdir):
             for fn in sorted(os.listdir(mdir)):
                 if fn not in live_shards:
@@ -4051,17 +4011,14 @@ class KeyedTable:
                 problems.append(
                     f"orphan record-index segment (cleanable): {fn}"
                 )
-        # the inverse: live files that SHOULD carry a sidecar but don't
-        # (never wrong — read_keys keeps sidecar-less files — but it
-        # means point lookups degrade to full scans; surface it)
-        if self.key_bloom:
+        # live files that SHOULD carry a manifest key bloom but don't
+        # (never wrong — read_keys keeps bloom-less files — but point
+        # lookups on them degrade to scans; surface it)
+        if self.key_bloom and latest is not None:
+            blooms = latest.file_blooms
             for f in sorted(live):
-                p = os.path.join(ddir, f)
-                if not (
-                    os.path.exists(B.sidecar_path(p))
-                    or os.path.exists(p + B.SIDECAR_SUFFIX)  # pre-r9
-                ):
-                    problems.append(f"live file missing bloom sidecar: {f}")
+                if f not in blooms:
+                    problems.append(f"live file missing manifest bloom: {f}")
         return problems
 
     def _require_columns(self, df: DataFrame, what: str) -> None:
@@ -4742,12 +4699,12 @@ class KeyedTable:
         # describes the old one — later upserts would mis-scope their
         # partition rewrites and duplicate rows.
         try:
-            files, n = self._write_index_aware(snap, cid, vidx)
+            written = self._write_index_aware(snap, cid, vidx)
             published = self._commit(
                 "change_partitioning",
-                files,
+                list(written),
                 snap.schema,
-                n,
+                written,
                 extra_stats={
                     "partition_by": new_pb or [],
                     "previous_partition_by": old_pb or [],
@@ -4820,7 +4777,7 @@ class KeyedTable:
             # a sharded target's shards are reused wholesale (file sets
             # identical) — the rollback copies ZERO per-file metadata;
             # only a legacy inline target needs its stats handed over
-            file_stats=None if man.shards is not None else man.file_stats,
+            file_meta=None if man.shards is not None else man._file_meta,
             # restoring a commit restores ITS deletion-vector state:
             # the target's masks come back (its blobs are referenced by
             # the still-present target commit, so clean() keeps them),
@@ -5370,23 +5327,17 @@ class KeyedTable:
             if ref_arrs
             else pa.array([], type=pa.string())
         )
-        walked: list[str] = []
-        bases: list[str] = []
         ddir = M.data_dir(self.path)
-        for dirpath, _dirs, fns in os.walk(ddir):
-            for fn in fns:
-                rel = os.path.relpath(os.path.join(dirpath, fn), ddir)
-                walked.append(rel)
-                bases.append(
-                    B.sidecar_base(rel)
-                    if rel.endswith(B.SIDECAR_SUFFIX)
-                    else rel
-                )
+        walked = [
+            os.path.relpath(os.path.join(dirpath, fn), ddir)
+            for dirpath, _dirs, fns in os.walk(ddir)
+            for fn in fns
+        ]
         orphans: list[str] = []
         if walked:
             unref = pc.invert(
                 pc.is_in(
-                    pa.array(bases, type=pa.string()), value_set=any_ref
+                    pa.array(walked, type=pa.string()), value_set=any_ref
                 )
             ).to_pylist()
             orphans = [
@@ -5540,8 +5491,7 @@ class KeyedTable:
         # pass per claim group, and ONLY the dead claims ever become
         # Python strings — the walk below is O(dead files), each with
         # the unlink syscall that is irreducible in any file-deleting
-        # GC. Explicit claims (v1 file lists + orphans, may include
-        # sidecar names whose verdict follows their base) stay a small
+        # GC. Explicit claims (v1 file lists + orphans) stay a small
         # Python list; manifest-derived claims (potentially the whole
         # dropped snapshot) stay arrow end to end.
         explicit = list(
@@ -5551,15 +5501,9 @@ class KeyedTable:
         )
         names: list[str] = []
         if explicit:
-            ebases = [
-                B.sidecar_base(n)
-                if n.endswith(B.SIDECAR_SUFFIX)
-                else n
-                for n in explicit
-            ]
             emask = pc.invert(
                 pc.is_in(
-                    pa.array(ebases, type=pa.string()),
+                    pa.array(explicit, type=pa.string()),
                     value_set=referenced_arr,
                 )
             ).to_pylist()
@@ -5581,28 +5525,11 @@ class KeyedTable:
             if rel in seen:
                 continue
             seen.add(rel)
-            base = (
-                B.sidecar_base(rel)
-                if rel.endswith(B.SIDECAR_SUFFIX)
-                else rel
-            )
-            if base == rel:
-                # a data file's bloom sidecar lives and dies with it
-                # (hidden r9 name and the pre-r9 unhidden one)
-                for sc in (
-                    B.sidecar_path(os.path.join(ddir, rel)),
-                    os.path.join(ddir, rel + B.SIDECAR_SUFFIX),
-                ):
-                    try:
-                        os.unlink(sc)
-                    except FileNotFoundError:
-                        pass
             try:
                 os.unlink(os.path.join(ddir, rel))
             except FileNotFoundError:
                 continue  # crash-replay: already deleted
-            if base == rel:
-                removed.append(rel)
+            removed.append(rel)
         # DV blobs: planned orphans + blobs referenced only by the
         # planned-drop commits (derived from their still-present
         # manifests, same replay property as data files: blobs unlink
@@ -5995,19 +5922,16 @@ class KeyedTable:
         # write keeps per-file cell stats on the compacted files)
         vidx = (man.stats or {}).get("vector_index")
         cid = M.child_id(man.commit_id)
-        new_files, nrows = self._write_index_aware(
+        written = self._write_index_aware(
             binned, cid, vidx, repartition=False
         )
         return self._commit(
             "optimize",
-            M.with_new_files(
-                M.carried_files_arrow(man, set(todo)), new_files
-            ),
+            M.with_new_files(M.carried_files_arrow(man, set(todo)), written),
             full.schema,
+            written,
             base=man,
             touched=set(todo),
-            new_files=new_files,
-            rows=nrows,
             rewritten=sorted(str(p) for p in todo),
             extra_stats={"vector_index": vidx} if vidx is not None else None,
             cid=cid,
@@ -6300,7 +6224,6 @@ class KeyedTable:
             "drop_columns",
             man.files,
             new_schema,
-            rows=0,
             extra_stats={
                 "dropped_cols": sorted(set(cols)),
                 **({"vector_index": vidx} if vidx is not None else {}),
@@ -6366,7 +6289,6 @@ class KeyedTable:
             "add_columns",
             man.files,
             StructType(new_fields),
-            rows=0,
             extra_stats={
                 "added_cols": sorted(cols),
                 **({"vector_index": vidx} if vidx is not None else {}),
@@ -6447,29 +6369,25 @@ class KeyedTable:
         clustered = assigned.repartitionByRange(
             max(len(centroids), 1), F.col(cell)
         ).sortWithinPartitions(cell)
-        prev_stats = list(self.stats_cols or [])
-        if cell not in prev_stats:
-            self.stats_cols = prev_stats + [cell]
-        try:
-            cid = M.child_id(man_pin.commit_id)
-            files, nrows = self._write_files(clustered, cid, repartition=False)
-            return self._commit(
-                "index",
-                files,
-                clustered.schema,
-                rows=nrows,
-                cid=cid,
-                extra_stats={
-                    "vector_index": {
-                        "kind": "ivf",
-                        "vec_col": vec_col,
-                        "cell_col": cell,
-                        "centroids": centroids,
-                    }
-                },
-            )
-        finally:
-            self.stats_cols = prev_stats
+        cid = M.child_id(man_pin.commit_id)
+        written = self._write_files(
+            clustered, cid, repartition=False, extra_stat=cell
+        )
+        return self._commit(
+            "index",
+            list(written),
+            clustered.schema,
+            written,
+            cid=cid,
+            extra_stats={
+                "vector_index": {
+                    "kind": "ivf",
+                    "vec_col": vec_col,
+                    "cell_col": cell,
+                    "centroids": centroids,
+                }
+            },
+        )
 
     LSH_BUCKET_PREFIX = "__lshb"
 
@@ -6533,12 +6451,12 @@ class KeyedTable:
             max(2, min(2**n_planes, 64)), F.col(bucket_cols[0])
         ).sortWithinPartitions(bucket_cols[0])
         cid = M.child_id(man_pin.commit_id)
-        files, nrows = self._write_files(clustered, cid, repartition=False)
+        written = self._write_files(clustered, cid, repartition=False)
         return self._commit(
             "index",
-            files,
+            list(written),
             clustered.schema,
-            rows=nrows,
+            written,
             cid=cid,
             extra_stats={
                 "vector_index": {
@@ -6621,18 +6539,12 @@ class KeyedTable:
 
     def _write_index_aware(
         self, df: DataFrame, cid: str, vidx: dict | None, repartition: bool = True
-    ) -> tuple[list[str], int]:
+    ) -> dict[str, "M.FileMeta"]:
         """:meth:`_write_files`, recording per-file cell stats when an
         IVF index is being carried so the indexed search keeps its
         manifest-level file skipping on the new files."""
-        prev_sc = list(self.stats_cols or [])
         cell = vidx.get("cell_col") if vidx and vidx.get("kind") == "ivf" else None
-        if cell and cell not in prev_sc:
-            self.stats_cols = prev_sc + [cell]
-        try:
-            return self._write_files(df, cid, repartition=repartition)
-        finally:
-            self.stats_cols = prev_sc
+        return self._write_files(df, cid, repartition, extra_stat=cell)
 
     def vector_index(self) -> dict | None:
         """The vector index registered by the LATEST commit, or None.
@@ -6897,11 +6809,19 @@ class KeyedTable:
         return df.filter(expr)
 
     def _write_files(
-        self, df: DataFrame, commit_id: str, repartition: bool = True
-    ) -> tuple[list[str], int]:
+        self,
+        df: DataFrame,
+        commit_id: str,
+        repartition: bool = True,
+        extra_stat: str | None = None,
+    ) -> dict[str, "M.FileMeta"]:
         """Stage a Spark parquet write, then move files into ``data/``
         with commit-prefixed names (write-data-first; the manifest rename
-        in :meth:`_commit` is the publish point).
+        in :meth:`_commit` is the publish point). Returns
+        ``{rel_file: FileMeta}`` in write order: footer rows, on-disk
+        bytes, footer min/max of ``stats_cols`` (plus ``extra_stat``),
+        and the key bloom when ``key_bloom`` is on — everything the
+        manifest shard records per file.
 
         ``repartition=False`` trusts the caller's partitioning (used by
         :meth:`optimize`, which bins rows by target file size first).
@@ -6912,6 +6832,8 @@ class KeyedTable:
         referencing the loser's contents. The loser's uniquely-named
         files stay orphaned (never referenced) until clean()."""
         import uuid
+
+        import pyarrow.parquet as pq
 
         token = uuid.uuid4().hex[:8]
         stage = os.path.join(self.path, ".tmp", f"{commit_id}-{token}")
@@ -6932,10 +6854,11 @@ class KeyedTable:
             w = w.partitionBy(*self.partition_by)
         w.parquet(stage)
 
-        moved: list[str] = []
+        stats_cols = list(self.stats_cols or [])
+        if extra_stat and extra_stat not in stats_cols:
+            stats_cols.append(extra_stat)
+        written: dict[str, M.FileMeta] = {}
         ddir = M.data_dir(self.path)
-        nrows = 0
-        i = 0
         for dirpath, _dirs, files in os.walk(stage):
             for fn in sorted(files):
                 if not fn.endswith(".parquet"):
@@ -6944,38 +6867,26 @@ class KeyedTable:
                 rel_dir = "" if rel_dir == "." else rel_dir
                 dest_dir = os.path.join(ddir, rel_dir)
                 os.makedirs(dest_dir, exist_ok=True)
-                new_name = f"{commit_id}-{token}-{i:05d}.parquet"
+                new_name = f"{commit_id}-{token}-{len(written):05d}.parquet"
                 dest = os.path.join(dest_dir, new_name)
                 os.replace(os.path.join(dirpath, fn), dest)
                 rel = os.path.join(rel_dir, new_name) if rel_dir else new_name
                 # rows + min/max from the parquet footer — no extra scan
-                n, st = _parquet_footer_stats(dest, self.stats_cols or [])
-                nrows += n
-                self._pending_rows[rel] = n
-                self._pending_bytes[rel] = os.path.getsize(dest)
-                if st:
-                    self._pending_stats[rel] = st
+                n, st = _parquet_footer_stats(dest, stats_cols)
+                bloom = None
                 if self.key_bloom:
                     # one key-column read of the just-written LOCAL file;
                     # on a real cluster this belongs executor-side at
-                    # write time (Hudi keeps it in the parquet footer).
-                    # The filter is built ONCE and lands in BOTH the
-                    # sidecar (legacy/compat) and the manifest shard
-                    # (the fast path: one columnar metadata load per
-                    # lookup instead of a tiny file open per data file).
-                    import json as _json
-
-                    import pyarrow.parquet as pq
-
+                    # write time (Hudi keeps it in the parquet footer)
                     kt = pq.read_table(dest, columns=self.key)
-                    bl = B.build(B.key_strings_table(kt.select(self.key)))
-                    with open(B.sidecar_path(dest), "w") as bf:
-                        _json.dump(bl, bf)
-                    self._pending_blooms[rel] = B.to_bytes(bl)
-                moved.append(rel)
-                i += 1
+                    bloom = B.to_bytes(
+                        B.build(B.key_strings_table(kt.select(self.key)))
+                    )
+                written[rel] = M.FileMeta(
+                    n, os.path.getsize(dest), st or None, bloom
+                )
         shutil.rmtree(stage, ignore_errors=True)
-        return moved, nrows
+        return written
 
     def _publish_rewrite(
         self,
@@ -7003,9 +6914,12 @@ class KeyedTable:
             out = out.persist()
         try:
             cid = M.child_id(man.commit_id)
-            new_files, nrows = self._write_index_aware(out, cid, vidx)
+            written = self._write_index_aware(out, cid, vidx)
             chlog = self._write_change_log(
-                prior, out, schema, rows_written=nrows
+                prior,
+                out,
+                schema,
+                rows_written=sum(m.rows for m in written.values()),
             )
         finally:
             if self.change_log:
@@ -7018,17 +6932,16 @@ class KeyedTable:
         scoped = touched is not None
         return self._commit(
             op,
-            M.with_new_files(M.carried_files_arrow(man, touched), new_files)
+            M.with_new_files(M.carried_files_arrow(man, touched), written)
             if scoped
-            else new_files,
+            else list(written),
             schema,
-            rows=nrows,
+            written,
             rewritten=sorted(touched) if scoped else ["<all>"],
             extra_stats=stats or None,
             cid=cid,
             base=man if scoped else None,
             touched=touched,
-            new_files=new_files,
             probe_keys_df=probe_keys_df,
             delete_free=delete_free,
         )
@@ -7038,32 +6951,26 @@ class KeyedTable:
         op: str,
         files: list[str],
         schema: StructType,
-        rows: int,
+        written: dict | None = None,
         rewritten=None,
         extra_stats: dict | None = None,
         cid: str | None = None,
         base=None,
         touched: set | None = None,
-        new_files: list[str] | None = None,
         probe_keys_df=None,
         delete_free: bool = False,
         dvs: dict | None = None,
     ) -> str:
         """Publish one commit; returns the id it published (the planned
-        ``cid``, or the rebased id when a disjoint-rival rebase won)."""
-        # Inline stats cover ONLY the files this commit just wrote;
-        # carried-forward files keep their stats inside the manifest
-        # shards write_manifest reuses (or recovers from broken shards)
-        # — the commit's metadata cost is O(delta), not O(table files).
+        ``cid``, or the rebased id when a disjoint-rival rebase won).
+        ``written`` is :meth:`_write_files`' ``{rel_file: FileMeta}``
+        for the files this commit wrote; each must be in ``files``."""
+        # Inline metadata covers ONLY the files this commit just wrote;
+        # carried-forward files keep theirs inside the manifest shards
+        # write_manifest reuses (or recovers from broken shards) — the
+        # commit's metadata cost is O(delta), not O(table files).
+        written = written or {}
         prev = M.read_manifest(self.path)
-        pending = self._pending_stats
-        pending_rows = self._pending_rows
-        pending_blooms = self._pending_blooms
-        pending_bytes = self._pending_bytes
-        self._pending_stats = {}
-        self._pending_rows = {}
-        self._pending_blooms = {}
-        self._pending_bytes = {}
         # Retired (dropped) column names are carried forward into EVERY
         # subsequent manifest: the guard must survive clean() aging out
         # the drop_columns commit itself, because pre-drop files in
@@ -7074,7 +6981,7 @@ class KeyedTable:
         retired |= set(prev_stats.get("dropped_cols", []))
         retired |= set((extra_stats or {}).get("dropped_cols", []))
         stats = {
-            "rows_written": rows,
+            "rows_written": sum(m.rows for m in written.values()),
             "partitions_rewritten": rewritten or [],
             # layout at commit time, in EVERY manifest: rollback across
             # a change_partitioning commit must restore the old scheme,
@@ -7095,49 +7002,16 @@ class KeyedTable:
         # re-reading the head here would let a rival's interleaved
         # commit be silently clobbered out of the new snapshot instead
         # of raising ConcurrentCommitError (lost update).
-        if isinstance(files, list):
-            files_in = sorted(files)
-            fstats = {f: pending[f] for f in files if f in pending}
-            frows = {
-                f: pending_rows[f] for f in files if f in pending_rows
-            }
-            fblooms = {
-                f: pending_blooms[f] for f in files if f in pending_blooms
-            }
-            fbytes = {
-                f: pending_bytes[f] for f in files if f in pending_bytes
-            }
-        else:
-            # arrow file array (partition-scoped commits): Python cost
-            # here is O(pending) = O(delta); membership of the few
-            # freshly written names is one C-side is_in
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            files_in = files
-            keys = sorted(
-                {*pending, *pending_rows, *pending_blooms, *pending_bytes}
-            )
-            live = set()
-            if keys:
-                mask = pc.is_in(
-                    pa.array(keys, type=pa.string()), value_set=files
-                ).to_pylist()
-                live = {k for k, m in zip(keys, mask) if m}
-            fstats = {f: v for f, v in pending.items() if f in live}
-            frows = {f: v for f, v in pending_rows.items() if f in live}
-            fblooms = {f: v for f, v in pending_blooms.items() if f in live}
-            fbytes = {f: v for f, v in pending_bytes.items() if f in live}
         commit_id = cid or M.next_commit_id(self.path)
         # Record-index carry: ONE central rule for every op — when the
         # parent registers an index and this commit didn't set its own
         # registration, append a delta run covering exactly the files
-        # this commit wrote (the pending-stats keys — the same source
-        # the manifest's O(delta) metadata uses, so no op can forget
-        # the index). Unmaintainable → drop honestly with a marker.
+        # this commit wrote (``written`` — the same source the
+        # manifest's O(delta) metadata uses, so no op can forget the
+        # index). Unmaintainable → drop honestly with a marker.
         reg = prev_stats.get("record_index")
         if reg is not None and "record_index" not in stats:
-            adv = self._rli_advance(reg, sorted(frows), commit_id, schema)
+            adv = self._rli_advance(reg, sorted(written), commit_id, schema)
             if adv is not None:
                 stats["record_index"] = adv
             else:
@@ -7149,7 +7023,7 @@ class KeyedTable:
             new_ci: dict = {}
             ci_dropped: list = []
             for c, r in prev_ci.items():
-                adv = self._rli_advance(r, sorted(frows), commit_id, schema)
+                adv = self._rli_advance(r, sorted(written), commit_id, schema)
                 if adv is not None:
                     new_ci[c] = adv
                 else:
@@ -7205,13 +7079,10 @@ class KeyedTable:
             commit_id=commit_id,
             op=op,
             ts=M.utc_now_iso(),
-            files=files_in,
+            files=sorted(files) if isinstance(files, list) else files,
             schema_json=schema.json(),
             stats=stats,
-            file_stats=fstats,
-            file_rows=frows,
-            file_blooms=fblooms,
-            file_bytes=fbytes,
+            file_meta=written,
             dvs=carried_dvs,
         )
         try:
@@ -7220,12 +7091,11 @@ class KeyedTable:
                 man,
                 base=base,
                 touched_dirs=touched,
-                new_files=new_files,
+                new_files=list(written),
             )
         except M.ConcurrentCommitError:
             commit_id = self._rebase_commit(
-                op, man, base, touched, new_files or [], fstats, frows,
-                fblooms, fbytes, probe_keys_df, delete_free,
+                op, man, base, touched, written, probe_keys_df, delete_free
             )
             if commit_id is None:
                 raise
@@ -7236,7 +7106,7 @@ class KeyedTable:
     # introduce or remove keys, only re-arrange existing rows/files.
     _REBASE_SAFE_OPS = frozenset({"optimize", "drop_partitions"})
 
-    def _staged_key_span(self, fstats: dict, new_files: list[str]):
+    def _staged_key_span(self, written: dict):
         """(lo, hi) normalized key span of this commit's STAGED files,
         or None when unprovable (composite key, or any staged file
         lacking key min/max — the key column must be in ``stats_cols``
@@ -7244,12 +7114,12 @@ class KeyedTable:
         trivially (no keys to collide)."""
         if len(self.key) != 1:
             return None
-        if not new_files:
+        if not written:
             return ("__empty__", "__empty__")
         k = self.key[0]
         lo = hi = None
-        for f in new_files:
-            st = (fstats.get(f) or {}).get(k)
+        for meta in written.values():
+            st = (meta.stats or {}).get(k)
             if st is None or st[0] is None or st[1] is None:
                 return None
             a, b = _stat_value(st[0]), _stat_value(st[1])
@@ -7380,8 +7250,8 @@ class KeyedTable:
         return True
 
     def _rebase_commit(
-        self, op, man, base, touched, new_files, fstats, frows, fblooms,
-        fbytes, probe_keys_df=None, delete_free=False,
+        self, op, man, base, touched, written, probe_keys_df=None,
+        delete_free=False,
     ) -> str | None:
         """DISJOINT-COMMIT REBASE (Hudi/Delta OCC conflict-resolution
         parity): a writer that loses the commit race re-publishes its
@@ -7446,7 +7316,7 @@ class KeyedTable:
             # ops drop keys from every provable set — exactly the
             # collisions that matter — and always re-merge.
             if op == "upsert":
-                key_span = self._staged_key_span(fstats, new_files)
+                key_span = self._staged_key_span(written)
             elif not (op == "merge_into" and delete_free):
                 return None
             if key_span is None and probe_keys_df is None:
@@ -7526,7 +7396,7 @@ class KeyedTable:
                 op=op,
                 ts=M.utc_now_iso(),
                 files=M.with_new_files(
-                    M.carried_files_arrow(head, touched), new_files
+                    M.carried_files_arrow(head, touched), written
                 ),
                 schema_json=my_schema,
                 # the record index CANNOT survive a rebase: my delta was
@@ -7567,10 +7437,7 @@ class KeyedTable:
                     ),
                     "rebased_onto": head.commit_id,
                 },
-                file_stats=fstats,
-                file_rows=frows,
-                file_blooms=fblooms,
-                file_bytes=fbytes,
+                file_meta=written,
                 dvs=head_dvs,
             )
             try:
@@ -7579,7 +7446,7 @@ class KeyedTable:
                     rebased,
                     base=head,
                     touched_dirs=touched,
-                    new_files=new_files,
+                    new_files=list(written),
                 )
                 return rebased.commit_id
             except M.ConcurrentCommitError:

@@ -48,6 +48,7 @@ import os
 import tempfile
 import threading
 import time
+from typing import NamedTuple
 
 #: delta shards per commit are grouped by partition dir, but never more
 #: than this many shard files per commit (groups hash-fold beyond it)
@@ -71,6 +72,22 @@ _SHARD_SCHEMA_COLS = [
     "min_s",
     "max_s",
 ]
+
+
+class FileMeta(NamedTuple):
+    """Everything a manifest shard records about one data file: the
+    footer row count, on-disk byte size, footer ``{col: [min, max]}``
+    stats, and the serialized key bloom (``bloom.to_bytes``). Writers
+    produce one per file they stage (``KeyedTable._write_files``);
+    :func:`write_manifest` turns it into the file's shard rows."""
+
+    rows: int | None = None
+    bytes: int | None = None
+    stats: dict | None = None
+    bloom: bytes | None = None
+
+
+_NO_META = FileMeta()
 
 
 def _shard_schema():
@@ -117,9 +134,11 @@ def _decode(i, f, s):
 
 class Manifest:
     """One commit's metadata. Producers construct it with inline
-    ``files``/``file_stats``; :func:`write_manifest` shard-izes and
-    publishes. Readers get lazy ``files``/``file_stats`` backed by the
-    shard parquet (cached; shards are immutable once published)."""
+    ``files`` plus ``file_meta`` (``{rel_file: FileMeta}`` for the
+    files the commit wrote); :func:`write_manifest` shard-izes and
+    publishes. Readers get lazy ``files``/``file_stats``/... backed by
+    the shard parquet (cached; shards are immutable once published),
+    or by ``file_meta`` for an unpublished or v1 inline manifest."""
 
     def __init__(
         self,
@@ -129,13 +148,10 @@ class Manifest:
         schema_json: str,
         files: list[str] | None = None,
         stats: dict | None = None,
-        file_stats: dict | None = None,
+        file_meta: dict | None = None,
         shards: list[str] | None = None,
         root: str | None = None,
         n_files: int | None = None,
-        file_rows: dict | None = None,
-        file_blooms: dict | None = None,
-        file_bytes: dict | None = None,
         dvs: dict | None = None,
     ):
         self.commit_id = commit_id
@@ -152,10 +168,9 @@ class Manifest:
         self.shards = shards  # None = inline/v1; list = v2 shard names
         self.root = root
         self._files = files
-        self._file_stats = file_stats
-        self._file_rows = file_rows
-        self._file_blooms = file_blooms
-        self._file_bytes = file_bytes
+        self._file_meta = file_meta or {}
+        self._file_stats = None
+        self._per_file_cache: dict = {}
         self._n_files = n_files
         self._shard_tbl = None  # cached concatenated arrow table
         self._files_arr = None  # cached arrow file-name array
@@ -192,89 +207,66 @@ class Manifest:
         the typed shard columns. Loaded lazily; most paths (pruning,
         shard reuse) never need the full dict."""
         if self._file_stats is None:
-            out: dict = {}
             t = self.shard_table()
-            if t is not None:
+            if t is None:
+                out = {f: m.stats for f, m in self._file_meta.items()}
+            else:
+                out = {}
                 cols = {c: t[c].to_pylist() for c in _SHARD_SCHEMA_COLS}
                 for k in range(t.num_rows):
                     c = cols["col"][k]
                     if c is None:
-                        out.setdefault(cols["file"][k], {})
                         continue
                     out.setdefault(cols["file"][k], {})[c] = [
                         _decode(cols["min_i"][k], cols["min_f"][k], cols["min_s"][k]),
                         _decode(cols["max_i"][k], cols["max_f"][k], cols["max_s"][k]),
                     ]
-                out = {f: st for f, st in out.items() if st}
-            self._file_stats = out
+            self._file_stats = {f: st for f, st in out.items() if st}
         return self._file_stats
+
+    def _per_file(self, field: str) -> dict:
+        """{rel_file: value} of one per-file ``FileMeta`` field — from
+        the shards' ``col IS NULL`` row each file carries, or from
+        ``file_meta`` when there are no shards. Files without a value
+        (legacy shards, key_bloom off) are absent."""
+        if field not in self._per_file_cache:
+            t = self.shard_table()
+            if t is None:
+                pairs = (
+                    (f, getattr(m, field)) for f, m in self._file_meta.items()
+                )
+            else:
+                import pyarrow.compute as pc
+
+                sub = t.filter(pc.is_null(t["col"]))
+                pairs = zip(sub["file"].to_pylist(), sub[field].to_pylist())
+            self._per_file_cache[field] = {
+                f: v for f, v in pairs if v is not None
+            }
+        return self._per_file_cache[field]
 
     @property
     def file_rows(self) -> dict:
-        """{rel_file: footer row count} from the shards' per-file rows
-        (the ``col IS NULL`` row each file carries). Files from legacy
-        shards without the count are absent."""
-        if self._file_rows is None:
-            out: dict = {}
-            t = self.shard_table()
-            if t is not None:
-                import pyarrow.compute as pc
-
-                sub = t.filter(pc.is_null(t["col"]))
-                for f, n in zip(
-                    sub["file"].to_pylist(), sub["rows"].to_pylist()
-                ):
-                    if n is not None:
-                        out[f] = n
-            self._file_rows = out
-        return self._file_rows
+        """{rel_file: footer row count}."""
+        return self._per_file("rows")
 
     @property
     def file_bytes(self) -> dict:
-        """{rel_file: on-disk byte size} from the shards' per-file
-        rows — what lets optimize()/compaction_report size-probe a
-        1M-file table from metadata instead of 1M stat syscalls (HEAD
-        requests, on an object store). Files from legacy shards
-        without the column are absent; callers fall back to stat."""
-        if self._file_bytes is None:
-            out: dict = {}
-            t = self.shard_table()
-            if t is not None:
-                import pyarrow.compute as pc
-
-                sub = t.filter(pc.is_null(t["col"]))
-                for f, b in zip(
-                    sub["file"].to_pylist(), sub["bytes"].to_pylist()
-                ):
-                    if b is not None:
-                        out[f] = b
-            self._file_bytes = out
-        return self._file_bytes
+        """{rel_file: on-disk byte size} — what lets
+        optimize()/compaction_report size-probe a 1M-file table from
+        metadata instead of 1M stat syscalls (HEAD requests, on an
+        object store). Callers fall back to stat for absent files."""
+        return self._per_file("bytes")
 
     @property
     def file_blooms(self) -> dict:
-        """{rel_file: decoded key-bloom dict} from the shards' per-file
-        ``bloom`` bytes (the Hudi footer-bloom idiom moved into the
-        columnar manifest): a point lookup probes ONE metadata load
-        instead of opening a tiny sidecar per data file. Files written
-        without blooms (key_bloom off, legacy shards) are absent —
-        callers fall back to the sidecar, then to never-skip."""
-        if self._file_blooms is None:
-            from hudi_glue_spark.table import bloom as B
+        """{rel_file: decoded key-bloom dict} (the Hudi footer-bloom
+        idiom moved into the columnar manifest): a point lookup probes
+        ONE metadata load instead of opening a file per data file.
+        Files without a bloom are absent — callers never skip them."""
+        from hudi_glue_spark.table import bloom as B
 
-            out: dict = {}
-            t = self.shard_table()
-            if t is not None:
-                import pyarrow.compute as pc
-
-                sub = t.filter(pc.is_null(t["col"]))
-                for f, raw in zip(
-                    sub["file"].to_pylist(), sub["bloom"].to_pylist()
-                ):
-                    if raw is not None:
-                        out[f] = B.from_bytes(raw)
-            self._file_blooms = out
-        return self._file_blooms
+        return {f: B.from_bytes(raw) for f, raw in self._per_file("bloom").items()}
 
     def total_rows(self) -> int | None:
         """Exact snapshot row count from metadata alone — the
@@ -548,7 +540,10 @@ class Manifest:
             schema_json=d["schema_json"],
             stats=d.get("stats", {}),
             files=d.get("files"),
-            file_stats=d.get("file_stats"),
+            file_meta={
+                f: FileMeta(stats=st)
+                for f, st in (d.get("file_stats") or {}).items()
+            },
             shards=d.get("shards"),
             root=root,
             n_files=d.get("n_files"),
@@ -701,18 +696,11 @@ def shard_file_array(root: str, name: str):
     return hit
 
 
-def _write_shard(root: str, name: str, rows: list[tuple]) -> None:
-    """rows: (file, col|None, rows|None, stats-[min,max]|None) → typed
-    parquet. Written to a temp name then renamed; shard names are
-    unique per writer attempt (commit id + random token), so racers
-    and retries never overwrite each other's staged shards — orphans
-    from crashed/lost attempts are GC'd by clean(); the JSON link is
-    the real lock."""
+def _rows_table(rows: list[tuple]):
+    """Shard rows ``(file, col|None, rows, bytes, bloom, [min, max]|None)``
+    (see :func:`_stats_rows`) → a typed shard-schema arrow table."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    mdir = manifests_dir(root)
-    os.makedirs(mdir, exist_ok=True)
     cols: dict[str, list] = {c: [] for c in _SHARD_SCHEMA_COLS}
     for f, c, n, by, bl, mm in rows:
         cols["file"].append(f)
@@ -726,31 +714,30 @@ def _write_shard(root: str, name: str, rows: list[tuple]) -> None:
             cols[slot].append(v)
         for slot, v in zip(("max_i", "max_f", "max_s"), hi):
             cols[slot].append(v)
-    tbl = pa.table(cols, schema=_shard_schema())
-    fd, tmp = tempfile.mkstemp(dir=mdir, suffix=".tmp")
-    os.close(fd)
-    try:
-        pq.write_table(tbl, tmp, compression="zstd")
-        os.replace(tmp, os.path.join(mdir, name))
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
+    return pa.table(cols, schema=_shard_schema())
+
+
+def _as_shard_schema(tbl):
+    """A loaded shard table (any generation) in the current column
+    order and types — what lets recovered rows concat with fresh ones."""
+    return tbl.select(_SHARD_SCHEMA_COLS).cast(_shard_schema())
 
 
 def _write_shard_table(root: str, name: str, tbl) -> None:
-    """Write an already-columnar shard table (recovered survivor rows
-    of broken shards) — the zero-re-encode path: rows move from the
-    old shard's parquet to the new one as arrow columns, never through
-    Python tuples."""
+    """Write one shard. Written to a temp name then renamed; shard
+    names are unique per writer attempt (commit id + random token), so
+    racers and retries never overwrite each other's staged shards —
+    orphans from crashed/lost attempts are GC'd by clean(); the JSON
+    link is the real lock. Recovered survivor rows of broken shards
+    move in as arrow columns, never through Python tuples."""
     import pyarrow.parquet as pq
 
     mdir = manifests_dir(root)
     os.makedirs(mdir, exist_ok=True)
-    tbl = tbl.select(_SHARD_SCHEMA_COLS).cast(_shard_schema())
     fd, tmp = tempfile.mkstemp(dir=mdir, suffix=".tmp")
     os.close(fd)
     try:
-        pq.write_table(tbl, tmp, compression="zstd")
+        pq.write_table(_as_shard_schema(tbl), tmp, compression="zstd")
         os.replace(tmp, os.path.join(mdir, name))
     finally:
         if os.path.exists(tmp):
@@ -789,28 +776,17 @@ def _shard_dirs(root: str, name: str) -> frozenset:
     return hit
 
 
-def _stats_rows(
-    files: list[str], stats_of, rows_of=None, bloom_of=None, bytes_of=None
-) -> list[tuple]:
-    """One ``col IS NULL`` row per file carrying its footer row count,
-    on-disk byte size, and (optional) key-bloom bytes, plus one row per
-    stats column."""
+def _stats_rows(files: list[str], meta: dict) -> list[tuple]:
+    """One ``col IS NULL`` row per file carrying its ``FileMeta`` row
+    count, byte size and key-bloom bytes, plus one row per stats
+    column. A file absent from ``meta`` still gets its (all-null)
+    per-file row: the shard rows ARE the snapshot's file list."""
     rows: list[tuple] = []
     for f in files:
-        rows.append(
-            (
-                f,
-                None,
-                rows_of(f) if rows_of else None,
-                bytes_of(f) if bytes_of else None,
-                bloom_of(f) if bloom_of else None,
-                None,
-            )
-        )
-        st = stats_of(f)
-        if st:
-            for c in sorted(st):
-                rows.append((f, c, None, None, None, st[c]))
+        m = meta.get(f, _NO_META)
+        rows.append((f, None, m.rows, m.bytes, m.bloom, None))
+        for c in sorted(m.stats or {}):
+            rows.append((f, c, None, None, None, m.stats[c]))
     return rows
 
 
@@ -909,34 +885,14 @@ def _fast_shards(
     ) - len(new_files)
     if n_covered != carried_n:
         return False
-    inline = dict(manifest._file_stats or {})
-    inline_rows = dict(manifest._file_rows or {})
-    inline_blooms = dict(manifest._file_blooms or {})
-    inline_bytes = dict(manifest._file_bytes or {})
-
-    def bloom_of(f: str):
-        b = inline_blooms.get(f)
-        if b is None:
-            return None
-        if isinstance(b, (bytes, bytearray)):
-            return bytes(b)
-        from hudi_glue_spark.table import bloom as B
-
-        return B.to_bytes(b)
-
     import uuid
 
     token = uuid.uuid4().hex[:8]
     names: list[str] = []
     for k, group in enumerate(_group_delta(sorted(set(new_files)))):
         name = f"{manifest.commit_id}-{token}-{k:04d}.parquet"
-        _write_shard(
-            root,
-            name,
-            _stats_rows(
-                group, inline.get, inline_rows.get, bloom_of,
-                inline_bytes.get,
-            ),
+        _write_shard_table(
+            root, name, _rows_table(_stats_rows(group, manifest._file_meta))
         )
         names.append(name)
     if rec_tables:
@@ -973,9 +929,9 @@ def write_manifest(
     (a) survives intact in this commit and (b) doesn't overlap an
     already-chosen shard is referenced as-is — zero metadata rewrite
     for those files. The uncovered delta (new files + survivors of
-    broken shards) is written as fresh partition-grouped shards; stats
-    for the delta come from the manifest's inline ``file_stats`` (new
-    files' footer stats + carried stats the producer looked up).
+    broken shards) is written as fresh partition-grouped shards: new
+    files' rows come from the manifest's ``file_meta``, survivors' rows
+    are copied as-is from the broken shards that held them.
 
     Publish is atomic with optimistic concurrency: the commit JSON is
     written to a temp file then ``os.link``-ed to its final name —
@@ -1099,15 +1055,15 @@ def write_manifest(
         else:
             delta = new_arr.to_pylist()
 
-        inline = dict(manifest._file_stats or {})
-        inline_rows = dict(manifest._file_rows or {})
-        inline_blooms = dict(manifest._file_blooms or {})
-        inline_bytes = dict(manifest._file_bytes or {})
-        # Delta files whose stats/row counts the producer didn't hand
-        # us inline (carried-forward survivors of broken shards)
-        # recover them from the shards that still hold them — O(broken
-        # shards), never a full-table stats load.
-        need = {f for f in delta if f not in inline or f not in inline_rows}
+        # Delta files this commit did not write (carried-forward
+        # survivors of broken shards): recover their shard rows from
+        # the shards that still hold them — filtered arrow rows, never
+        # decoded and re-encoded — O(broken shards), never a full-table
+        # stats load.
+        meta = manifest._file_meta
+        need = {f for f in delta if f not in meta}
+        recovered: set[str] = set()
+        parts = []
         if need:
             # Which broken shards hold the needed files: ONE C-side
             # membership pass over the concatenated candidate names —
@@ -1134,43 +1090,25 @@ def write_manifest(
                 off += len(a)
                 if not m.any():
                     continue
-                hit = set(pc.filter(a, pa.array(m)).to_pylist())
+                # a file may sit in several candidate shards: the
+                # first one that still holds it wins
+                hit = need & set(pc.filter(a, pa.array(m)).to_pylist())
+                if not hit:
+                    continue
                 try:
                     t = _load_shard(root, s)
                 except FileNotFoundError:
                     continue  # cleaner reclaimed it mid-recovery
-
-                sub = t.filter(
-                    pc.is_in(t["file"], value_set=pa.array(sorted(hit)))
+                parts.append(
+                    _as_shard_schema(
+                        t.filter(
+                            pc.is_in(
+                                t["file"], value_set=pa.array(sorted(hit))
+                            )
+                        )
+                    )
                 )
-                cols = {c: sub[c].to_pylist() for c in _SHARD_SCHEMA_COLS}
-                for k in range(sub.num_rows):
-                    c = cols["col"][k]
-                    f = cols["file"][k]
-                    if c is None:
-                        if cols["rows"][k] is not None and f not in inline_rows:
-                            inline_rows[f] = cols["rows"][k]
-                        if (
-                            cols["bytes"][k] is not None
-                            and f not in inline_bytes
-                        ):
-                            inline_bytes[f] = cols["bytes"][k]
-                        if (
-                            cols["bloom"][k] is not None
-                            and f not in inline_blooms
-                        ):
-                            inline_blooms[f] = cols["bloom"][k]
-                        continue
-                    if f in inline:
-                        continue  # producer-supplied stats win
-                    inline.setdefault(f, {})[c] = [
-                        _decode(
-                            cols["min_i"][k], cols["min_f"][k], cols["min_s"][k]
-                        ),
-                        _decode(
-                            cols["max_i"][k], cols["max_f"][k], cols["max_s"][k]
-                        ),
-                    ]
+                recovered |= hit
                 need -= hit
                 if not need:
                     break
@@ -1179,30 +1117,20 @@ def write_manifest(
             # read so upgrading a legacy table doesn't drop its stats
             prev = read_manifest(root)
             if prev is not None and prev.shards is None:
-                for f in sorted(need):
-                    st = prev.file_stats.get(f)
-                    if st and f not in inline:
-                        inline[f] = st
-
-        def stats_of(f: str):
-            return inline.get(f)
-
-        def rows_of(f: str):
-            return inline_rows.get(f)
-
-        def bytes_of(f: str):
-            return inline_bytes.get(f)
-
-        def bloom_of(f: str):
-            b = inline_blooms.get(f)
-            if b is None:
-                return None
-            if isinstance(b, (bytes, bytearray)):
-                return bytes(b)
-            from hudi_glue_spark.table import bloom as B
-
-            return B.to_bytes(b)
-
+                old = prev.file_stats
+                meta = {**meta, **{f: FileMeta(stats=old.get(f)) for f in need}}
+        fresh = [f for f in delta if f not in recovered]
+        tbl = pa.concat_tables([_rows_table(_stats_rows(fresh, meta)), *parts])
+        # partition-grouped delta shards: rows ordered by their file's
+        # position in the concatenated groups, then sliced per group
+        groups = _group_delta(delta)
+        order = pa.array([f for g in groups for f in g], type=pa.string())
+        pos = pc.index_in(tbl["file"], value_set=order).to_numpy(
+            zero_copy_only=False
+        )
+        idx = np.argsort(pos, kind="stable")
+        tbl = tbl.take(pa.array(idx))
+        ends = np.searchsorted(pos[idx], np.cumsum([len(g) for g in groups]))
         # shard names carry a per-writer random token (same reason as
         # data files: two writers racing one commit id must not
         # overwrite each other's staged shards; the loser's stay
@@ -1210,14 +1138,12 @@ def write_manifest(
         import uuid
 
         token = uuid.uuid4().hex[:8]
-        for k, group in enumerate(_group_delta(delta)):
+        start = 0
+        for k, end in enumerate(ends):
             name = f"{manifest.commit_id}-{token}-{k:04d}.parquet"
-            _write_shard(
-                root,
-                name,
-                _stats_rows(group, stats_of, rows_of, bloom_of, bytes_of),
-            )
+            _write_shard_table(root, name, tbl.slice(start, end - start))
             chosen.append(name)
+            start = end
         manifest.shards = sorted(chosen)
         manifest._n_files = len(new_arr)
         manifest._files = None

@@ -31,7 +31,7 @@ after the scan. No "latest entry wins" reduction is needed, which
 also keeps the index correct for tables holding duplicate keys
 (``bulk_insert(dedupe=False)``).
 
-At 100 TB the difference is the probe shape: the bloom sidecar probe
+At 100 TB the difference is the probe shape: the manifest bloom probe
 decodes O(live files) filters driver-side per lookup, while the RLI
 prunes by key span to a handful of sorted segments and answers with
 an executor-side scan of O(probe-span) index bytes — and a

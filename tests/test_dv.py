@@ -370,8 +370,8 @@ def _rival_action_during_write(monkeypatch, root, action):
     orig = KeyedTable._write_files
     fired = {}
 
-    def write_with_rival(self, df, cid, repartition=True):
-        out = orig(self, df, cid, repartition)
+    def write_with_rival(self, *args, **kwargs):
+        out = orig(self, *args, **kwargs)
         if self.path == root and not fired:
             fired["x"] = 1
             monkeypatch.setattr(KeyedTable, "_write_files", orig)

@@ -300,8 +300,8 @@ def test_optimize_unpartitioned(spark, tmp_path):
     t = KeyedTable(str(tmp_path / "t"), key="pk", precombine="update_ts")
     t.save_meta()
     df = day0(spark)
-    files, nrows = t._write_files(df.repartition(8), "x", repartition=False)
-    t._commit("bulk_insert", files, df.schema, rows=nrows)
+    written = t._write_files(df.repartition(8), "x", repartition=False)
+    t._commit("bulk_insert", list(written), df.schema, written)
     assert len(M.read_manifest(t.path).files) > 1
     assert t.optimize(spark, target_file_mb=64) is not None
     assert len(M.read_manifest(t.path).files) == 1
@@ -1055,10 +1055,10 @@ def test_insert_overwrite_replaces_only_batch_partitions(spark, tmp_path):
 def test_bloom_point_lookup_prunes_files_no_false_negatives(spark, tmp_path):
     """key_bloom tables: a point lookup opens a strict subset of files,
     every present key is found (no false negatives, per construction),
-    and clean() keeps live sidecars while dropping orphaned ones."""
+    and after an upsert + clean() every live file still carries its
+    manifest bloom while the rewritten file is gone."""
     import os
 
-    from hudi_glue_spark.table import bloom as B
     from hudi_glue_spark.table import manifest as M
 
     t = KeyedTable(str(tmp_path / "t"), key="pk", precombine="update_ts",
@@ -1071,10 +1071,7 @@ def test_bloom_point_lookup_prunes_files_no_false_negatives(spark, tmp_path):
 
     man = M.read_manifest(t.path)
     ddir = M.data_dir(t.path)
-    assert all(
-        os.path.exists(B.sidecar_path(os.path.join(ddir, f)))
-        for f in man.files
-    )
+    assert set(man.file_blooms) == set(man.files)
     # pruning: one key lives in exactly one partition's file(s)
     keep = t.files_with_keys([17])
     assert 0 < len(keep) < len(man.files)
@@ -1091,12 +1088,10 @@ def test_bloom_point_lookup_prunes_files_no_false_negatives(spark, tmp_path):
     on_disk = {
         os.path.relpath(os.path.join(dp, fn), ddir)
         for dp, _d, fns in os.walk(ddir) for fn in fns
-        if fn.endswith(B.SIDECAR_SUFFIX)
     }
-    assert on_disk == {
-        os.path.relpath(B.sidecar_path(os.path.join(ddir, f)), ddir)
-        for f in man2.files
-    }
+    assert on_disk == set(man2.files)
+    assert set(man2.file_blooms) == set(man2.files)
+    assert len(t.files_with_keys([0])) < len(man2.files)
     assert {r.val for r in t.read_keys(spark, [0]).collect()} == {"new0"}
 
 
@@ -1418,13 +1413,13 @@ def test_bloom_key_canonicalization_no_false_negatives(spark, tmp_path):
     assert got == {17, 23}
 
 
-def test_validate_flags_sidecar_problems(spark, tmp_path):
-    """validate() audits bloom sidecars: an orphaned sidecar (data file
-    no longer referenced) and a live file missing its sidecar are both
-    surfaced (ADVICE r4, keyed_table.py:359)."""
+def test_validate_flags_bloom_problems(spark, tmp_path):
+    """validate() audits key blooms: a stray ``.bloom`` file in the data
+    dir (what tables written before blooms moved into the manifest
+    leave behind) is an orphan clean() reclaims. (A live file with no
+    manifest bloom: see the reopened-with-key_bloom test below.)"""
     import os
 
-    from hudi_glue_spark.table import bloom as B
     from hudi_glue_spark.table import manifest as M
 
     t = KeyedTable(str(tmp_path / "t"), key="pk", precombine="update_ts",
@@ -1435,17 +1430,182 @@ def test_validate_flags_sidecar_problems(spark, tmp_path):
     assert t.validate() == []
 
     ddir = M.data_dir(t.path)
-    man = M.read_manifest(t.path)
-    # plant an orphan sidecar + remove a live file's sidecar
-    stray = os.path.join(ddir, "part=p0", "deadbeef.parquet" + B.SIDECAR_SUFFIX)
-    with open(stray, "w") as f:
+    victim = sorted(M.read_manifest(t.path).files)[0]
+    stray_rel = os.path.join(
+        os.path.dirname(victim), "." + os.path.basename(victim) + ".bloom"
+    )
+    with open(os.path.join(ddir, stray_rel), "w") as f:
         f.write("{}")
-    victim = sorted(man.files)[0]
-    os.unlink(B.sidecar_path(os.path.join(ddir, victim)))
+    assert t.validate() == [f"orphan file (cleanable): {stray_rel}"]
+    assert t.clean() == [stray_rel]
+    assert t.validate() == []
 
-    problems = t.validate()
-    assert any("orphan bloom sidecar" in p for p in problems)
-    assert any(p == f"live file missing bloom sidecar: {victim}" for p in problems)
+
+def test_validate_reports_bloomless_load_reopened_with_key_bloom(
+    spark, tmp_path
+):
+    """A key_bloom=False load reopened with key_bloom=True: validate()
+    names every live file that has no manifest bloom; files a later
+    upsert writes carry one, and point lookups still find every key
+    (bloom-less files are never skipped)."""
+    from hudi_glue_spark.table import manifest as M
+
+    path = str(tmp_path / "t")
+    rows = [Row(pk=i, part=f"p{i % 4}", val=f"v{i}", update_ts=ts(10))
+            for i in range(40)]
+    KeyedTable(path, key="pk", precombine="update_ts",
+               partition_by="part").bulk_insert(spark.createDataFrame(rows))
+    t = KeyedTable(path, key="pk", precombine="update_ts",
+                   partition_by="part", key_bloom=True)
+    old = sorted(M.read_manifest(path).files)
+    assert t.validate() == [
+        f"live file missing manifest bloom: {f}" for f in old
+    ]
+
+    t.upsert(spark.createDataFrame(
+        [Row(pk=1, part="p1", val="new1", update_ts=ts(11))]
+    ))
+    man = M.read_manifest(path)
+    fresh = set(man.files) - set(old)
+    assert fresh and fresh <= set(man.file_blooms)
+    assert t.validate() == [
+        f"live file missing manifest bloom: {f}"
+        for f in sorted(set(man.files) & set(old))
+    ]
+    got = {r.pk: r.val for r in t.read_keys(spark, [1, 2, 39]).collect()}
+    assert got == {1: "new1", 2: "v2", 39: "v39"}
+
+
+def test_legacy_bloom_files_are_ignored_and_cleaned(spark, tmp_path):
+    """Tables written before key blooms moved into the manifest hold
+    ``.bloom`` JSON files next to their data (hidden ``.f.parquet.bloom``
+    and the older unhidden ``f.parquet.bloom``). With no bloom bytes in
+    the shards, nothing reads them: read_keys finds every key even when
+    the planted files claim the keys are absent, and clean() removes
+    exactly those files and no data file."""
+    import json
+    import os
+
+    from hudi_glue_spark.table import bloom as B
+    from hudi_glue_spark.table import manifest as M
+
+    path = str(tmp_path / "t")
+    rows = [Row(pk=i, part=f"p{i % 4}", val=f"v{i}", update_ts=ts(10))
+            for i in range(40)]
+    KeyedTable(path, key="pk", precombine="update_ts",
+               partition_by="part").bulk_insert(spark.createDataFrame(rows))
+    man = M.read_manifest(path)
+    assert man.file_blooms == {}
+    ddir = M.data_dir(path)
+    planted = []
+    for k, f in enumerate(sorted(man.files)):
+        d, base = os.path.split(f)
+        name = ("." + base if k % 2 else base) + ".bloom"
+        planted.append(os.path.join(d, name))
+        # an EMPTY filter: a reader trusting it would skip the file
+        with open(os.path.join(ddir, d, name), "w") as fh:
+            json.dump(B.build([]), fh)
+
+    t = KeyedTable(path, key="pk", precombine="update_ts",
+                   partition_by="part", key_bloom=True)
+    assert t.files_with_keys(list(range(40))) == man.files
+    got = {r.pk for r in t.read_keys(spark, list(range(40))).collect()}
+    assert got == set(range(40))
+
+    assert sorted(t.clean()) == sorted(planted)
+    on_disk = {
+        os.path.relpath(os.path.join(dp, fn), ddir)
+        for dp, _d, fns in os.walk(ddir) for fn in fns
+    }
+    assert on_disk == set(man.files)
+    assert t.read(spark).count() == 40
+
+
+def test_ops_write_blooms_once_into_manifest_shards(spark, tmp_path):
+    """Across bulk_insert, upsert, delete, merge_into, upsert_dv and
+    optimize no ``.bloom`` file is written, and every live file's shard bloom is
+    bit-identical to ``B.build`` over that file's keys."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from hudi_glue_spark.table import bloom as B
+    from hudi_glue_spark.table import manifest as M
+
+    t = KeyedTable(str(tmp_path / "t"), key="pk", precombine="update_ts",
+                   partition_by="part", key_bloom=True)
+    ddir = M.data_dir(t.path)
+
+    def check():
+        man = M.read_manifest(t.path)
+        fb = man.file_blooms
+        assert set(fb) == set(man.files)
+        for f in man.files:
+            kt = pq.read_table(os.path.join(ddir, f), columns=["pk"])
+            want = B.build(B.key_strings_table(kt))
+            assert B.to_bytes(fb[f]) == B.to_bytes(want), f
+        assert not [
+            fn for _dp, _d, fns in os.walk(ddir) for fn in fns
+            if fn.endswith(".bloom")
+        ]
+
+    t.bulk_insert(spark.createDataFrame(
+        [Row(pk=i, part=f"p{i % 3}", val=f"v{i}", update_ts=ts(10))
+         for i in range(60)]
+    ))
+    check()
+    t.upsert(spark.createDataFrame(
+        [Row(pk=i, part="p0", val=f"u{i}", update_ts=ts(11))
+         for i in (0, 3, 61)]
+    ))
+    check()
+    t.delete(spark.createDataFrame([Row(pk=4), Row(pk=5)]))
+    check()
+    t.merge_into(spark.createDataFrame([
+        Row(pk=7, part="p1", val="m7", update_ts=ts(12)),
+        Row(pk=70, part="p2", val="m70", update_ts=ts(12)),
+    ]))
+    check()
+    # upsert_dv appends a file next to p1's: optimize has two to merge
+    t.upsert_dv(spark.createDataFrame(
+        [Row(pk=10, part="p1", val="d10", update_ts=ts(13))]
+    ))
+    check()
+    assert t.optimize(spark, target_file_mb=64) is not None
+    check()
+    got = {r.pk: r.val for r in t.read_keys(spark, [3, 7, 10, 61, 70]).collect()}
+    assert got == {3: "u3", 7: "m7", 10: "d10", 61: "u61", 70: "m70"}
+
+
+def test_upsert_dv_enforces_check_constraints(spark, tmp_path):
+    """upsert_dv applies CHECK constraints like upsert: a violating row
+    raises under on_violation='fail' (nothing published), and under
+    'quarantine' is set aside with its count in the commit stats."""
+    from hudi_glue_spark.table import manifest as M
+    from hudi_glue_spark.table.keyed_table import ConstraintViolation
+
+    base = [Row(pk=1, val=5, update_ts=ts(10)),
+            Row(pk=2, val=6, update_ts=ts(10))]
+    bad = [Row(pk=1, val=-7, update_ts=ts(11))]
+
+    t = KeyedTable(str(tmp_path / "f"), key="pk", precombine="update_ts",
+                   constraints={"pos": "val > 0"}, on_violation="fail")
+    t.bulk_insert(spark.createDataFrame(base))
+    head = t.commits()
+    with pytest.raises(ConstraintViolation, match="pos"):
+        t.upsert_dv(spark.createDataFrame(bad))
+    assert t.commits() == head
+    assert {r.pk: r.val for r in t.read(spark).collect()} == {1: 5, 2: 6}
+
+    q = KeyedTable(str(tmp_path / "q"), key="pk", precombine="update_ts",
+                   constraints={"pos": "val > 0"}, on_violation="quarantine")
+    q.bulk_insert(spark.createDataFrame(base))
+    q.upsert_dv(spark.createDataFrame(
+        bad + [Row(pk=2, val=9, update_ts=ts(11))]
+    ))
+    man = M.read_manifest(q.path)
+    assert man.op == "upsert_dv" and man.stats["quarantined"] == 1
+    assert {r.pk: r.val for r in q.read(spark).collect()} == {1: 5, 2: 9}
 
 
 def test_diff_commits_pre_post_images(spark, tmp_path):

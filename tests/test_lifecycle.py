@@ -307,8 +307,8 @@ def test_rival_commit_during_merge_window_detected(spark, tmp_path, monkeypatch)
     orig = KeyedTable._write_files
     fired = {}
 
-    def write_with_rival(self, df, cid, repartition=True):
-        out = orig(self, df, cid, repartition)
+    def write_with_rival(self, *args, **kwargs):
+        out = orig(self, *args, **kwargs)
         if self.path == root and not fired:
             fired["x"] = 1
             # rival: a full writer that read the SAME head and
@@ -605,8 +605,8 @@ def test_retry_adopts_rival_partition_layout(spark, tmp_path, monkeypatch):
     orig = KeyedTable._write_files
     fired = {}
 
-    def write_with_rival(self, df, cid, repartition=True):
-        out = orig(self, df, cid, repartition)
+    def write_with_rival(self, *args, **kwargs):
+        out = orig(self, *args, **kwargs)
         if self.path == root and not fired:
             fired["x"] = 1
             rival = KeyedTable.load(root)
@@ -930,8 +930,8 @@ def _rival_during_write(monkeypatch, spark, root, rival_batch):
     orig = KeyedTable._write_files
     fired = {}
 
-    def write_with_rival(self, df, cid, repartition=True):
-        out = orig(self, df, cid, repartition)
+    def write_with_rival(self, *args, **kwargs):
+        out = orig(self, *args, **kwargs)
         if self.path == root and not fired:
             fired["x"] = 1
             rival = KeyedTable.load(root)

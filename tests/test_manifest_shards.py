@@ -394,9 +394,9 @@ def test_partitions_metadata_table(spark, tmp_path):
 def test_key_blooms_ride_manifest_shards(spark, tmp_path):
     """Key blooms fold into the manifest shards (Hudi footer-bloom
     idiom, §9 item 1): a point lookup probes one columnar metadata
-    load — deleting every sidecar must not change the pruned file set
-    — and carried-forward files keep their bloom bytes through shard
-    recovery on later commits."""
+    load — no per-file bloom file exists, and a fresh instance prunes
+    the same set — and carried-forward files keep their bloom bytes
+    through shard recovery on later commits."""
     t = KeyedTable(
         str(tmp_path / "b"), key="id", precombine="ts", partition_by="day",
         stats_cols=["v"], key_bloom=True,
@@ -404,20 +404,17 @@ def test_key_blooms_ride_manifest_shards(spark, tmp_path):
     rows = [(d * 4 + i, day, d * 4 + i, None)
             for d, day in enumerate("abc") for i in range(4)]
     t.bulk_insert(_batch(spark, rows))
-    with_sidecars = t.files_with_keys([5])
-    assert len(with_sidecars) < len(M.read_manifest(t.path).files)
+    pruned = t.files_with_keys([5])
+    assert len(pruned) < len(M.read_manifest(t.path).files)
 
-    # nuke every sidecar: the manifest blooms alone must prune the same
+    # the manifest blooms are the only copy: no bloom file on disk
     ddir = M.data_dir(t.path)
-    n_side = 0
-    for dp, _dn, fs in os.walk(ddir):
-        for fn in fs:
-            if fn.endswith(".bloom"):
-                os.unlink(os.path.join(dp, fn))
-                n_side += 1
-    assert n_side > 0
-    t2 = KeyedTable.load(t.path)  # fresh instance: no sidecar cache
-    assert t2.files_with_keys([5]) == with_sidecars
+    assert not [
+        fn for _dp, _dn, fs in os.walk(ddir) for fn in fs
+        if fn.endswith(".bloom")
+    ]
+    t2 = KeyedTable.load(t.path)  # fresh instance
+    assert t2.files_with_keys([5]) == pruned
     got = {r.id for r in t2.read_keys(spark, [5]).collect()}
     assert got == {5}
 

@@ -90,8 +90,8 @@ def test_optimize_compacts_small_files(spark, tmp_path):
     )
     # force many tiny files: bypass the write-path repartition
     tbl.save_meta()
-    files, nrows = tbl._write_files(ev.repartition(16), "00001", repartition=False)
-    tbl._commit("bulk_insert", files, ev.schema, rows=nrows)
+    written = tbl._write_files(ev.repartition(16), "00001", repartition=False)
+    tbl._commit("bulk_insert", list(written), ev.schema, written)
     import hudi_glue_spark.table.manifest as M
 
     before = M.read_manifest(tbl.path)
@@ -129,8 +129,8 @@ def test_optimize_sort_by_tightens_file_ranges(spark, tmp_path):
     t.save_meta()
     # interleave timestamps across many small files (hash layout)
     df = spark.createDataFrame(rows).repartition(8)
-    files, n = t._write_files(df, "x", repartition=False)
-    t._commit("bulk_insert", files, df.schema, rows=n)
+    written = t._write_files(df, "x", repartition=False)
+    t._commit("bulk_insert", list(written), df.schema, written)
     lo = datetime.datetime(2026, 1, 1, 0)
     hi = datetime.datetime(2026, 1, 1, 23)
     assert len(t.files_in_range("update_ts", lo, hi)) == 8  # no pruning
@@ -193,8 +193,8 @@ def test_optimize_zorder_prunes_both_dimensions(spark, tmp_path):
     )
     t.save_meta()
     df = spark.createDataFrame(rows).repartition(16)
-    files, n = t._write_files(df, "x0", repartition=False)
-    t._commit("bulk_insert", files, df.schema, rows=n)
+    written = t._write_files(df, "x0", repartition=False)
+    t._commit("bulk_insert", list(written), df.schema, written)
     assert len(t.files_in_range("x", 0.0, 3.0)) == 16  # no pruning yet
     assert len(t.files_in_range("y", 0.0, 3.0)) == 16
 

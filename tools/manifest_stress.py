@@ -66,7 +66,7 @@ def main(
             files=files if not isinstance(files, dict) else sorted(files),
             schema_json=SCHEMA,
             stats={"rows_written": 0},
-            file_stats=delta_stats,
+            file_meta={f: M.FileMeta(stats=st) for f, st in delta_stats.items()},
         )
         mdir = M.manifests_dir(root)
         before = (

@@ -7,7 +7,7 @@ Builds a table of `rows` rows fragmented into ~rows/rows_per_file
 files (the many-small-files regime where driver-side bloom decoding
 is the bottleneck), then times:
 
-- files_with_keys (bloom sidecar probe, O(live files) driver work)
+- files_with_keys (manifest bloom probe, O(live files) driver work)
 - files_hosting_keys (RLI span-pruned probe)
 - read_keys end to end through each path
 - build_record_index, per-commit delta cost, compaction
