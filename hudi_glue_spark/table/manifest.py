@@ -48,6 +48,7 @@ import os
 import tempfile
 import threading
 import time
+import zlib
 from typing import NamedTuple
 
 #: delta shards per commit are grouped by partition dir, but never more
@@ -793,7 +794,9 @@ def _stats_rows(files: list[str], meta: dict) -> list[tuple]:
 def _group_delta(files: list[str]) -> list[list[str]]:
     """Partition-aligned delta grouping with capped fan-out: one shard
     per partition dir keeps future invalidation partition-scoped; the
-    hash-fold beyond MAX_DELTA_SHARDS bounds small-file count."""
+    hash-fold beyond MAX_DELTA_SHARDS bounds small-file count. The fold
+    hashes with CRC-32, not the per-process salted ``hash()``, so a
+    commit's shard layout is the same in every process."""
     groups: dict[str, list[str]] = {}
     for f in sorted(files):
         groups.setdefault(partition_of(f) or "", []).append(f)
@@ -801,7 +804,9 @@ def _group_delta(files: list[str]) -> list[list[str]]:
         return [groups[k] for k in sorted(groups)]
     folded: dict[int, list[str]] = {}
     for k in sorted(groups):
-        folded.setdefault(hash(k) % MAX_DELTA_SHARDS, []).extend(groups[k])
+        folded.setdefault(
+            zlib.crc32(k.encode()) % MAX_DELTA_SHARDS, []
+        ).extend(groups[k])
     return [folded[k] for k in sorted(folded)]
 
 

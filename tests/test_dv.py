@@ -1,24 +1,35 @@
 """Deletion vectors: positional row-level DML without file rewrites.
 
 Covers the full stack: bitmap codec (table/dv.py), DV-masked reads
-(full-snapshot, pruned, incremental, time travel), delete_dv /
-delete_where_dv / upsert_dv semantics vs their rewrite twins, the
-maintenance loop (optimize folds masks, clean reclaims blobs,
-validate audits them), and OCC interplay (a rival DV commit defeats
-the global-key rebase proofs; a disjoint rival's masks survive a
-rebase)."""
+(full-snapshot, pruned, incremental, time travel), the maintenance
+loop (optimize folds masks, clean reclaims blobs, validate audits
+them), and OCC interplay (a rival DV commit defeats the global-key
+rebase proofs; a disjoint rival's masks survive a rebase).
+
+delete_dv / delete_where_dv / update_where_dv / upsert_dv share their
+copy-on-write twins' front half and differ only in the publish tail,
+so the ``test_*_dv_matches_rewrite_*`` tests run each op sequence
+through both strategies, under both late-data policies and both key
+scopes, and require the two snapshots to equal each other and a pandas
+model of the op's contract."""
 
 from __future__ import annotations
 
 import shutil
+from collections import Counter
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from hudi_glue_spark.table import KeyedTable, dv as DVB
 from hudi_glue_spark.table import manifest as M
-from hudi_glue_spark.table.keyed_table import ARRIVAL_WINS, EVENT_TIME_WINS
+from hudi_glue_spark.table.keyed_table import (
+    ARRIVAL_WINS,
+    EVENT_TIME_WINS,
+    ConstraintViolation,
+)
 
 
 # -- codec -------------------------------------------------------------------
@@ -79,16 +90,100 @@ def rows_set(df):
     return {tuple(r) for r in df.collect()}
 
 
+# -- twin equivalence: each *_dv op against its copy-on-write twin ----------
+
+#: policy × key scope; global-scope cases keep the bare policy id
+TWINS = [
+    pytest.param(
+        policy, scope, id=policy if scope == "global" else f"{policy}-{scope}"
+    )
+    for scope in ("global", "partition")
+    for policy in (EVENT_TIME_WINS, ARRIVAL_WINS)
+]
+_COLS = ["pk", "part", "ts", "val", "gen"]
+
+
+def _twins(spark, name, policy, scope):
+    """Two copies of the :func:`_mk` table — one for the ``*_dv`` ops,
+    one for their copy-on-write twins — with a generated column and a
+    CHECK constraint, plus a pandas model of the snapshot."""
+    dv, cow = (
+        _mk(
+            spark, f"/tmp/dv_twin_{name}_{policy}_{scope}_{side}",
+            policy=policy, key_scope=scope,
+            derived_cols={"gen": "val * 10"},
+            constraints={"ts_not_negative": "ts >= 0"},
+        )
+        for side in ("dv", "cow")
+    )
+    pk = pd.Series(range(400), dtype="Int64")
+    model = pd.DataFrame(
+        {"pk": pk, "part": (pk % 4).astype(str), "ts": pk,
+         "val": pk * 2, "gen": pk * 20}
+    )
+    return dv, cow, model
+
+
+def _agree(spark, dv, cow, model):
+    """Both strategies' snapshots equal each other and the model."""
+    want = Counter(
+        tuple(None if pd.isna(v) else v for v in r)
+        for r in model[_COLS].astype(object).itertuples(index=False)
+    )
+    got = [
+        Counter(tuple(r) for r in t.read(spark).select(_COLS).collect())
+        for t in (dv, cow)
+    ]
+    assert got[0] == got[1] == want
+
+
+def _ident(scope):
+    return ["part", "pk"] if scope == "partition" else ["pk"]
+
+
+def _model_upsert(model, rows, policy, scope):
+    """The upsert contract: per row identity the max-precombine row wins
+    (NULL ranks last), the batch beats the table on a tie; ARRIVAL_WINS
+    replaces every identity the batch carries with its best row."""
+    ident = _ident(scope)
+    batch = pd.DataFrame(rows, columns=_COLS[:4]).astype(
+        {"pk": "Int64", "ts": "Int64", "val": "Int64"}
+    )
+    batch = batch.assign(gen=batch.val * 10, src=1)
+    if policy == ARRIVAL_WINS:
+        hit = model.set_index(ident).index.isin(batch.set_index(ident).index)
+        kept = model[~hit]
+    else:
+        kept, batch = model.iloc[:0], pd.concat([model.assign(src=0), batch])
+    won = batch.sort_values(
+        ["ts", "src"], ascending=False, na_position="last"
+    ).drop_duplicates(ident)
+    return pd.concat([kept, won.drop(columns="src")], ignore_index=True)
+
+
+def _drop(model, scope, frame_cols, rows):
+    """Model of a by-key delete: a frame carrying the partition column
+    deletes by row identity, a bare key frame by key everywhere."""
+    ident = _ident(scope) if "part" in frame_cols else ["pk"]
+    gone = pd.DataFrame(rows, columns=frame_cols).astype({"pk": "Int64"})
+    hit = model.set_index(ident).index.isin(gone.set_index(ident).index)
+    return model[~hit].reset_index(drop=True)
+
+
 # -- delete_dv ---------------------------------------------------------------
 
 
-def test_delete_dv_matches_rewrite_delete(spark):
-    a = _mk(spark, "/tmp/dv_del_a")
-    b = _mk(spark, "/tmp/dv_del_b")
+@pytest.mark.parametrize("policy,scope", TWINS)
+def test_delete_dv_matches_rewrite_delete(spark, policy, scope):
+    """Every delete shape marks exactly the rows its copy-on-write twin
+    rewrites away: a key list, a partition-scoped frame, a bare-key
+    frame, and a predicate as SQL text or as a Column."""
+    a, b, model = _twins(spark, "del", policy, scope)
     keys = [3, 17, 255, 399, 9999]  # incl. a miss
     a.delete_dv(keys)
     b.delete(spark.createDataFrame([(k,) for k in keys], "pk long"))
-    assert rows_set(a.read(spark)) == rows_set(b.read(spark))
+    model = _drop(model, scope, ["pk"], [(k,) for k in keys])
+    _agree(spark, a, b, model)
     assert a.read(spark).count() == 396
     # metadata count subtracts DV dead counts, no data I/O
     assert a.count_rows_metadata() == 396
@@ -98,6 +193,30 @@ def test_delete_dv_matches_rewrite_delete(spark):
     # the delete rewrote NOTHING: same live data files as before
     prev = M.read_manifest(a.path, a.commits()[0])
     assert man.files == prev.files
+
+    # a scoped frame, then a bare-key one: (20, '0') lives there, but
+    # pk 21 lives in part '1', so (21, '2') matches under global scope only
+    for schema, rows in (
+        ("pk long, part string", [(20, "0"), (21, "2")]),
+        ("pk long", [(30,), (31,)]),
+    ):
+        df = spark.createDataFrame(rows, schema)
+        a.delete_dv(df)
+        b.delete(df)
+        model = _drop(model, scope, df.columns, rows)
+        _agree(spark, a, b, model)
+
+    for pred, keep in (
+        ("val > 780", lambda m: m.val <= 780),
+        (F.col("val") > 700, lambda m: m.val <= 700),
+    ):
+        assert a.delete_where_dv(spark, pred) is not None
+        b.delete_where(spark, pred)
+        model = model[keep(model)].reset_index(drop=True)
+        _agree(spark, a, b, model)
+    assert a.delete_where_dv(spark, F.col("val") > 100000) is None
+
+
 
 
 def test_delete_dv_dataframe_and_predicate(spark):
@@ -130,11 +249,15 @@ def test_delete_dv_point_lookup_prunes_and_masks(spark):
 # -- upsert_dv ---------------------------------------------------------------
 
 
-@pytest.mark.parametrize("policy", [EVENT_TIME_WINS, ARRIVAL_WINS])
-def test_upsert_dv_matches_rewrite_upsert(spark, policy):
-    a = _mk(spark, f"/tmp/dv_up_a_{policy}", policy=policy)
-    b = _mk(spark, f"/tmp/dv_up_b_{policy}", policy=policy)
-    batch = spark.createDataFrame(
+@pytest.mark.parametrize("policy,scope", TWINS)
+def test_upsert_dv_matches_rewrite_upsert(spark, policy, scope):
+    """upsert_dv leaves upsert's snapshot per policy and key scope:
+    newer, tied, stale and new keys; duplicate batch keys; NULL
+    precombines on the batch side, the table side and both; a key
+    re-homed to another partition; and a CHECK violation, which both
+    refuse before publishing anything."""
+    a, b, model = _twins(spark, "up", policy, scope)
+    batches = [
         [
             (2, "2", 5000, -1),  # newer -> wins
             (3, "3", 5000, -2),
@@ -142,17 +265,43 @@ def test_upsert_dv_matches_rewrite_upsert(spark, policy):
             (5, "1", 0, -4),  # stale -> loses under event-time
             (1000, "0", 1, -5),  # insert
         ],
-        "pk long, part string, ts long, val long",
-    )
-    a.upsert_dv(batch)
-    b.upsert(batch)
-    assert rows_set(a.read(spark)) == rows_set(b.read(spark))
-    assert a.count_rows_metadata() == b.read(spark).count()
-    man = M.read_manifest(a.path)
-    assert man.op == "upsert_dv"
-    # base files were NOT rewritten: the new commit only ADDS files
-    prev = set(M.read_manifest(a.path, a.commits()[0]).files)
-    assert prev <= set(man.files)
+        [
+            (11, "3", 900, 1), (11, "3", 905, 2),  # duplicate key
+            (12, "0", None, 3), (12, "0", 3, 4),  # NULL ranks last
+            (6, "2", None, 5),  # NULL batch precombine vs ts 6
+            (2000, "0", None, 6), (2001, "1", None, 7),  # NULL inserts
+            (9, "2", 50, 8),  # pk 9 lives in part '1'
+        ],
+        [
+            (2000, "0", 5, 9),  # NULL table precombine vs ts 5
+            (2001, "1", None, 10),  # NULL on both sides
+            (6, "2", None, 11),
+        ],
+    ]
+    schema = "pk long, part string, ts long, val long"
+    for i, rows in enumerate(batches):
+        a.upsert_dv(spark.createDataFrame(rows, schema))
+        b.upsert(spark.createDataFrame(rows, schema))
+        model = _model_upsert(model, rows, policy, scope)
+        _agree(spark, a, b, model)
+        assert a.count_rows_metadata() == len(model)
+        man = M.read_manifest(a.path)
+        assert man.op == "upsert_dv"
+        # base files were NOT rewritten: the new commit only ADDS files
+        prev = set(M.read_manifest(a.path, a.commits()[-2]).files)
+        assert prev <= set(man.files), i
+    assert a.validate_unique_keys(spark) == b.validate_unique_keys(spark) == 0
+
+    heads = a.commits()[-1], b.commits()[-1]
+    bad = spark.createDataFrame([(7, "3", -5, 0)], schema)
+    with pytest.raises(ConstraintViolation):
+        a.upsert_dv(bad)
+    with pytest.raises(ConstraintViolation):
+        b.upsert(bad)
+    assert (a.commits()[-1], b.commits()[-1]) == heads
+    _agree(spark, a, b, model)
+
+
 
 
 def test_upsert_dv_duplicate_key_batch(spark):
@@ -564,19 +713,25 @@ def test_upsert_dv_maintains_vector_index(spark):
     assert m_rows == sorted(map(tuple, rebuilt.collect()))
 
 
-def test_update_where_dv_matches_rewrite_update(spark):
+@pytest.mark.parametrize("policy,scope", TWINS)
+def test_update_where_dv_matches_rewrite_update(spark, policy, scope):
     """The MoR predicate UPDATE equals the rewrite twin row-for-row:
-    matched rows' old positions die, updated images append, untouched
-    rows never move; guards mirror update_where; metadata count holds;
-    stacking a later delete over updated rows composes."""
-    a = _mk(spark, "/tmp/dv_upd_a")
-    b = _mk(spark, "/tmp/dv_upd_b")
+    matched rows' old positions die, updated images append (their
+    generated column recomputed from the SET input), untouched rows
+    never move; the SET guards and CHECK-on-update are update_where's;
+    metadata count holds; stacking a later delete over updated rows
+    composes."""
+    a, b, model = _twins(spark, "upd", policy, scope)
     sets = {"val": "val + 1000", "ts": "ts + 50000"}
     pred = "pk % 10 = 3 AND val < 500"
     cid = a.update_where_dv(spark, sets, pred)
     b.update_where(spark, sets, pred)
+    hit = (model.pk % 10 == 3) & (model.val < 500)
+    model.loc[hit, "val"] += 1000
+    model.loc[hit, "ts"] += 50000
+    model["gen"] = model.val * 10
     assert cid is not None
-    assert rows_set(a.read(spark)) == rows_set(b.read(spark))
+    _agree(spark, a, b, model)
     assert a.count_rows_metadata() == 400
     man = M.read_manifest(a.path)
     assert man.op == "update_where_dv" and man.stats["dv_changed"]
@@ -588,14 +743,29 @@ def test_update_where_dv_matches_rewrite_update(spark):
     assert a.commits()[-1] == head
     assert [p for p in a.validate() if "cleanable" not in p] == []
     # guards mirror update_where
-    with pytest.raises(ValueError, match="key/partition"):
-        a.update_where_dv(spark, {"part": "'x'"}, "pk = 1")
-    with pytest.raises(ValueError, match="unknown column"):
-        a.update_where_dv(spark, {"nope": "1"}, "pk = 1")
+    for t in (a, b):
+        op = t.update_where_dv if t is a else t.update_where
+        with pytest.raises(ValueError, match="key/partition"):
+            op(spark, {"part": "'x'"}, "pk = 1")
+        with pytest.raises(ValueError, match="generated"):
+            op(spark, {"gen": "1"}, "pk = 1")
+        with pytest.raises(ValueError, match="unknown column"):
+            op(spark, {"nope": "1"}, "pk = 1")
+    # CHECK-on-update: an updated image may not violate a constraint,
+    # whatever on_violation says; nothing is published
+    heads = a.commits()[-1], b.commits()[-1]
+    for t in (a, b):
+        t.add_constraint("val_pos", "val > 0")
+    with pytest.raises(ConstraintViolation):
+        a.update_where_dv(spark, {"val": "-7"}, "pk = 3")
+    with pytest.raises(ConstraintViolation):
+        b.update_where(spark, {"val": "-7"}, "pk = 3")
+    assert (a.commits()[-1], b.commits()[-1]) == heads
+    _agree(spark, a, b, model)
     # stacking: delete one UPDATED row (lives in an appended file)
     a.delete_dv([3])
     b.delete(spark.createDataFrame([(3,)], "pk long"))
-    assert rows_set(a.read(spark)) == rows_set(b.read(spark))
+    _agree(spark, a, b, model[model.pk != 3])
 
 
 def test_rollback_restores_dv_state(spark):
@@ -650,8 +820,8 @@ def test_dv_dml_never_rebases_on_partition_scope(spark, monkeypatch):
     orig = KeyedTable._dv_entries
     fired = {}
 
-    def hook(self, spark_, man, marked, cid):
-        out = orig(self, spark_, man, marked, cid)
+    def hook(self, man, marked, cid):
+        out = orig(self, man, marked, cid)
         if not fired:
             fired["x"] = 1
             rival.upsert(

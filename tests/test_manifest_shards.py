@@ -520,3 +520,32 @@ def test_file_bytes_in_shards(spark, tmp_path):
     assert set(fb2) == set(man2.files)
     for f, b in fb2.items():
         assert b == os.path.getsize(os.path.join(ddir, f)), f
+
+
+def test_delta_shard_fold_is_process_independent():
+    """Beyond MAX_DELTA_SHARDS partition dirs, ``_group_delta`` folds
+    dirs into shards by a hash; two processes with different
+    ``PYTHONHASHSEED`` values must fold the same commit the same way,
+    or shard layout, manifest bytes and the compaction trigger vary
+    from run to run."""
+    import subprocess
+    import sys
+
+    files = [f"day={d:03d}/f{d}.parquet" for d in range(3 * M.MAX_DELTA_SHARDS)]
+    prog = (
+        "import json, sys\n"
+        "from hudi_glue_spark.table import manifest as M\n"
+        "print(json.dumps(M._group_delta(json.loads(sys.stdin.read()))))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    groupings = []
+    for seed in ("1", "2"):
+        env = {**os.environ, "PYTHONHASHSEED": seed, "PYTHONPATH": root}
+        out = subprocess.run(
+            [sys.executable, "-c", prog], input=json.dumps(files),
+            capture_output=True, text=True, env=env, check=True,
+        )
+        groupings.append(json.loads(out.stdout))
+    assert groupings[0] == groupings[1]
+    assert len(groupings[0]) <= M.MAX_DELTA_SHARDS
+    assert sorted(f for g in groupings[0] for f in g) == sorted(files)
