@@ -51,6 +51,7 @@ from pyspark.sql.window import Window
 from hudi_glue_spark.table import bloom as B
 from hudi_glue_spark.table import dv as DVB
 from hudi_glue_spark.table import manifest as M
+from hudi_glue_spark.table import record_index as RI
 
 #: process-wide view-name ownership: (id(session), view name) →
 #: (session, owning table path). The latest register() wins the name;
@@ -68,6 +69,22 @@ def _session_stopped(spark: SparkSession) -> bool:
     except Exception:
         return True
 
+
+#: stats-shaped key pairs (record-index slot, column-index slots) that
+#: ``KeyedTable._index_regs`` / ``_index_stats`` map to and from
+#: ``{slot: value}``: the registrations, the rebuild markers a dropped
+#: registration leaves, and the ``wanted_indexes`` intent
+_REG_KEYS = ("record_index", "column_indexes")
+_DROP_KEYS = ("record_index_dropped", "column_indexes_dropped")
+_WANT_KEYS = ("record_index", "columns")
+#: the ops that publish index registrations themselves (``_commit``
+#: carries every other op's registrations forward)
+_INDEX_OPS = frozenset(
+    {
+        "record_index", "record_index_compact", "drop_record_index",
+        "column_index", "column_index_compact", "drop_column_index",
+    }
+)
 
 ARRIVAL_WINS = "arrival_wins"
 EVENT_TIME_WINS = "event_time_wins"
@@ -217,15 +234,18 @@ class KeyedTable:
     #: (``_canon_expr``); a schema the twins still can't compare
     #: skips the log honestly (the gate/coarse contract remains).
     change_log: bool = False
-    #: indexes this table SHOULD carry — ``{"record_index": bool,
-    #: "columns": [col, ...]}`` — maintained by build_*/drop_* and
-    #: persisted in _meta.json. The OCC-rebase path drops a
-    #: registration it can't keep sound and leaves a ``*_dropped``
-    #: marker in that commit's stats; if another commit lands before
-    #: maintenance runs, the marker is no longer at HEAD and a
-    #: marker-only policy would leave the index unbuilt forever. This
-    #: field makes :meth:`run_maintenance` CONVERGE: wanted and absent
-    #: → rebuild, regardless of where the drop happened (§9d#2).
+    #: index slots this table SHOULD carry — ``{"record_index": True,
+    #: "columns": [col, ...]}``: the record index is the key column's
+    #: slot, each column index its column's, and one lifecycle serves
+    #: both (``_index_regs`` reads this pair like the commit stats).
+    #: Maintained by build_*/drop_* and persisted in _meta.json. The
+    #: OCC-rebase path drops a registration it can't keep sound and
+    #: leaves a ``*_dropped`` marker in that commit's stats; if another
+    #: commit lands before maintenance runs, the marker is no longer at
+    #: HEAD and a marker-only policy would leave the index unbuilt
+    #: forever. This field makes :meth:`run_maintenance` CONVERGE:
+    #: wanted and absent → rebuild, regardless of where the drop
+    #: happened (§9d#2).
     wanted_indexes: dict | None = None
 
     def __post_init__(self):
@@ -1071,154 +1091,196 @@ class KeyedTable:
             )
         return out
 
-    # -- record-level index (key → file; Hudi 1.0 RLI parity) --------------
+    # -- indexes: the record index and secondary column indexes ------------
+    #
+    # One lifecycle for both kinds. An index lives in a SLOT: slot None
+    # is the record index on the key column (Hudi 1.0 record-level
+    # index), any other slot is the secondary index of that column
+    # (Hudi 1.0 secondary index). Every slot is the same machinery —
+    # value-sorted ``(value, file, seq)`` segments under ``_rli/``, a
+    # registration in the commit stats, one delta run per mutating
+    # commit (``_commit``'s central hook), fold, rollback restore,
+    # rebase drop, clean GC and one maintenance policy — and the same
+    # pruning-superset lookup (``read_keys`` / ``read_isin`` /
+    # ``read_range`` prefer it). Min/max stats can't prune scattered
+    # values (every file spans most user_ids); the index can — the
+    # "find this user's events in a table keyed by event_id" shape.
 
     #: fold the delta runs back into sorted base segments once this
     #: many mutating commits have stacked (each point lookup opens
     #: every delta run that intersects its key span)
     RLI_COMPACT_MIN_DELTAS = 8
 
-    def _want_index(
-        self, kind: str, col: str | None = None, want: bool = True
-    ) -> None:
-        """Record (or retract) the intent that this table carries an
-        index, in _meta.json — see ``wanted_indexes``. Best-effort
-        bookkeeping like ``constraints``: last writer wins on a race,
-        and a lost update only delays a rebuild by one maintenance
-        pass (the marker path still fires when it is at HEAD)."""
-        w = dict(self.wanted_indexes or {})
-        if kind == "record_index":
-            w["record_index"] = want
+    @staticmethod
+    def _index_regs(stats: dict | None, keys=_REG_KEYS) -> dict:
+        """``{slot: registration}`` of a commit's stats: the record
+        index under slot None, each column index under its column.
+        ``keys`` reads another pair laid out the same way:
+        ``_DROP_KEYS`` (the ``*_dropped`` rebuild markers) or
+        ``_WANT_KEYS`` (``wanted_indexes``); a column LIST maps each
+        column to True."""
+        s = stats or {}
+        cols = s.get(keys[1]) or {}
+        out = dict(cols) if isinstance(cols, dict) else dict.fromkeys(cols, True)
+        if s.get(keys[0]):
+            out[None] = s[keys[0]]
+        return out
+
+    @staticmethod
+    def _index_stats(slots: dict, keys=_REG_KEYS) -> dict:
+        """The inverse of :meth:`_index_regs`; a kind with no slot
+        writes no key. Registrations keep their per-column map, any
+        other pair writes a sorted column list."""
+        cols = {c: v for c, v in slots.items() if c is not None}
+        out = {keys[0]: slots[None]} if None in slots else {}
+        if cols:
+            out[keys[1]] = cols if keys is _REG_KEYS else sorted(cols)
+        return out
+
+    @staticmethod
+    def _index_name(slot) -> tuple[str, str, str]:
+        """A slot's op-name stem, maintenance skip-key stem and label."""
+        if slot is None:
+            return "record_index", "rli", "record index"
+        return "column_index", "ci", f"column {slot!r} index"
+
+    def _want_index(self, slot, want: bool = True) -> None:
+        """Record (or retract) the intent that this table carries the
+        ``slot`` index, in _meta.json — see ``wanted_indexes``.
+        Best-effort bookkeeping like ``constraints``: last writer wins
+        on a race, and a lost update only delays a rebuild by one
+        maintenance pass (the marker path still fires when it is at
+        HEAD)."""
+        w = self._index_regs(self.wanted_indexes, _WANT_KEYS)
+        if want:
+            w[slot] = True
         else:
-            cols = set(w.get("columns") or [])
-            (cols.add if want else cols.discard)(col)
-            w["columns"] = sorted(cols)
-        self.wanted_indexes = w
+            w.pop(slot, None)
+        self.wanted_indexes = self._index_stats(w, _WANT_KEYS)
         if self.exists():
             self.save_meta()
 
-    def record_index_info(self, at: str | None = None) -> dict | None:
-        """The snapshot's record-index registration (span maps
-        materialized from the sidecar when the commit packed them —
-        §9d#1), or None when no index is registered (metadata-only
-        read)."""
-        from hudi_glue_spark.table import record_index as RI
-
+    def _index_info(self, slot, at: str | None = None) -> dict | None:
+        """``slot``'s registration at ``at`` (HEAD by default), span
+        maps materialized from the sidecar when the commit packed them
+        (§9d#1); None when unregistered (metadata-only read)."""
         man = M.read_manifest(self.path, at)
-        if man is None:
-            return None
         return RI.resolve_reg(
-            self.path, (man.stats or {}).get("record_index")
+            self.path, self._index_regs(man.stats if man else None).get(slot)
         )
 
-    def build_record_index(
-        self, spark: SparkSession, max_records_per_file: int = 5_000_000
+    def _build_index(
+        self, spark: SparkSession, slot, max_records_per_file: int = 5_000_000
     ) -> str:
-        """Materialize the record-level index for the current snapshot:
-        one mask-aware pass over the table's key column + row
-        coordinates → globally key-sorted parquet segments under
-        ``_rli/`` (tight per-segment key spans from the footers), and a
-        registration in the commit stats. Every later mutating commit
-        APPENDS an O(its new rows) delta run (``_commit``'s central
-        hook — no op-specific wiring, so a new write path can't forget
-        the index); :meth:`compact_record_index` folds the runs.
+        """Materialize ``slot``'s index for the current snapshot: one
+        mask-aware pass over its column + row coordinates → globally
+        value-sorted parquet segments under ``_rli/`` (tight
+        per-segment spans from the footers), and a registration in the
+        commit stats. Every later mutating commit APPENDS an O(its new
+        rows) delta run (``_commit``'s central hook — no op-specific
+        wiring, so a new write path can't forget the index);
+        :meth:`_compact_index` folds the runs.
 
         ↦ the record-key index the reference enables implicitly via
         Hudi's upsert tagging (glue/HudiJarGlueJob.py:83
         ``hoodie.upsert.shuffle.parallelism``); Hudi 1.0 ships the same
-        structure as the metadata table's ``record_index`` partition."""
-        from hudi_glue_spark.table import record_index as RI
-
-        if len(self.key) != 1:
+        structure as the metadata table's ``record_index`` and
+        ``secondary_index`` partitions."""
+        if slot is None and len(self.key) != 1:
             raise ValueError("record index supports single-column keys")
-        man = M.read_manifest(self.path)
-        if man is None:
-            raise FileNotFoundError(f"no commits at {self.path}")
-        k = self.key[0]
-        src = self._positioned_read(spark, man, man.files, columns=self.key)
-        ent = src.select(
-            F.col(k),
-            F.col("__file").alias("file"),
-            F.lit(0).cast("long").alias("seq"),
+        col = self.key[0] if slot is None else slot
+        man = self._pin_head()
+        if col not in StructType.fromJson(json.loads(man.schema_json)).names:
+            raise ValueError(f"no such column {col!r}")
+        src = self._positioned_read(spark, man, man.files, columns=[col])
+        published = self._publish_index(
+            self._index_name(slot)[0], man, slot,
+            src.select(col, F.col("__file").alias("file")),
+            max_records_per_file,
         )
-        cid = M.child_id(man.commit_id)
-        spans = RI.write_entries(
-            ent, self.path, cid, k, max_records_per_file
-        )
-        reg = {"key": k, "seq": 1, "base": spans, "deltas": {}}
-        schema = StructType.fromJson(json.loads(man.schema_json))
-        published = self._commit(
-            "record_index",
-            man.files_arrow(),
-            schema,
-            cid=cid,
-            extra_stats={"record_index": reg},
-            base=man,
-            touched=set(),
-        )
-        self._want_index("record_index")
+        self._want_index(slot)
         return published
 
-    def drop_record_index(self) -> str | None:
-        """Unregister the record index (metadata-only commit; the
+    def _drop_index(self, slot) -> str | None:
+        """Unregister ``slot``'s index (metadata-only commit; the
         orphaned segments are reclaimed by :meth:`clean` once no
         retained commit references them). No-op → None."""
         man = M.read_manifest(self.path)
-        if man is None or (man.stats or {}).get("record_index") is None:
+        if man is None or slot not in self._index_regs(man.stats):
             return None
-        schema = StructType.fromJson(json.loads(man.schema_json))
-        published = self._commit(
-            "drop_record_index",
-            man.files_arrow(),
-            schema,
-            extra_stats={"record_index": None},
-            base=man,
-            touched=set(),
+        published = self._publish_index(
+            "drop_" + self._index_name(slot)[0], man, slot
         )
-        self._want_index("record_index", want=False)
+        self._want_index(slot, want=False)
         return published
 
-    def _rli_entries_for_files(
-        self,
-        spark: SparkSession,
-        files: list[str],
-        seq: int,
-        key_col: str,
-        schema: StructType,
-    ) -> DataFrame:
-        """(key, file, seq) for every row of the given JUST-WRITTEN
-        files — a native key-column scan with ``_metadata`` coordinates
-        (fresh files never carry deletion vectors). ``schema`` is the
-        COMMIT's schema (a widening commit's new files already hold the
-        wide type; the head's narrow schema would mis-read them)."""
-        kschema = StructType(
-            [f for f in schema.fields if f.name == key_col]
+    def _compact_index(
+        self, spark: SparkSession, slot, max_records_per_file: int = 5_000_000
+    ) -> str | None:
+        """Fold ``slot``'s delta runs into fresh sorted base segments,
+        dropping entries whose host file left the live set — one
+        distributed pass over O(index) slim rows, no data-file I/O.
+        Published as a metadata commit; older snapshots keep their own
+        registrations (segments are immutable, clean() reclaims).
+        No index or nothing to fold → None."""
+        man = M.read_manifest(self.path)
+        if man is None or not RI.n_deltas(self._index_regs(man.stats).get(slot)):
+            return None
+        field, ent = self._index_entries(spark, man, slot, live=True)
+        return self._publish_index(
+            self._index_name(slot)[0] + "_compact", man, slot,
+            ent.select(field.name, "file").distinct(),
+            max_records_per_file,
         )
-        src = self._native_scan(spark, files, kschema, with_positions=True)
-        return src.select(
-            F.col(key_col),
-            F.col("__file").alias("file"),
-            F.lit(seq).cast("long").alias("seq"),
+
+    def _publish_index(
+        self, op: str, man, slot, ent=None, max_records_per_file=None
+    ) -> str:
+        """Publish ``slot``'s new state as a metadata-only commit on
+        the pinned ``man``: a fresh base registration over ``ent``'s
+        ``(value, file)`` rows, or — ``ent`` None — no registration
+        (the drop). Every other slot carries unchanged."""
+        regs = self._index_regs(man.stats)
+        cid = M.child_id(man.commit_id)
+        if ent is None:
+            del regs[slot]
+        else:
+            col = ent.columns[0]
+            spans = RI.write_entries(
+                ent.withColumn("seq", F.lit(0).cast("long")),
+                self.path, cid, col, max_records_per_file,
+            )
+            regs[slot] = {"key": col, "seq": 1, "base": spans, "deltas": {}}
+        return self._commit(
+            op,
+            man.files_arrow(),
+            StructType.fromJson(json.loads(man.schema_json)),
+            cid=cid,
+            extra_stats=self._index_stats(regs),
+            base=man,
+            touched=set(),
         )
 
     def _rli_advance(
         self, reg: dict, new_names: list[str], cid: str, schema: StructType
     ) -> dict | None:
         """Advance the registration across one commit: append a delta
-        run covering the commit's freshly written files. Returns the
-        new registration, or None when the index cannot be maintained
-        (no active session / scan failure) — the caller then DROPS the
-        registration rather than publish a stale index (the honesty
-        rule every index here follows).
+        run covering the commit's freshly written files — a native scan
+        of the indexed column with ``_metadata`` coordinates (fresh
+        files never carry deletion vectors) under the COMMIT's
+        ``schema`` (a widening commit's new files already hold the wide
+        type). Returns the new registration, or None when the index
+        cannot be maintained (column gone from ``schema``, no active
+        session, scan failure) — the caller then DROPS the registration
+        rather than publish a stale index (the honesty rule every index
+        here follows).
 
         A PACKED registration (§9d#1 pointer) whose maps don't change
         this commit carries through as the SAME pointer — the sidecar
         is immutable and shared across commits, so a long metadata-
         only stretch costs zero new sidecar files."""
-        from hudi_glue_spark.table import record_index as RI
-
-        if reg["key"] not in {f.name for f in schema.fields}:
-            return None  # indexed column gone from the committed schema
+        if reg["key"] not in schema.names:
+            return None
         if not new_names:
             return dict(reg)  # metadata-only commit: carry unchanged
         spark = SparkSession.getActiveSession()
@@ -1226,49 +1288,103 @@ class KeyedTable:
             return None
         try:
             reg_full = RI.resolve_reg(self.path, reg)
-            ent = self._rli_entries_for_files(
-                spark, new_names, int(reg_full["seq"]), reg_full["key"], schema
+            col = reg_full["key"]
+            src = self._native_scan(
+                spark, new_names, StructType([schema[col]]),
+                with_positions=True,
             )
             # delta-size gate for the one-job single-segment write:
-            # the (key, file, seq) entries of a commit whose new data
-            # files total under the scan-split size trivially fit one
-            # task; bigger deltas keep the parallel global sort
+            # the entries of a commit whose new data files total under
+            # the scan-split size trivially fit one task; bigger
+            # deltas keep the parallel global sort
             ddir = M.data_dir(self.path)
-            small = True
-            total = 0
-            for f in new_names:
-                try:
-                    total += os.path.getsize(os.path.join(ddir, f))
-                except OSError:
-                    small = False
-                    break
-                if total > 128 * 1024 * 1024:
-                    small = False
-                    break
+            try:
+                small = sum(
+                    os.path.getsize(os.path.join(ddir, f)) for f in new_names
+                ) <= 128 * 1024 * 1024
+            except OSError:
+                small = False
             spans = RI.write_entries(
-                ent, self.path, cid, reg_full["key"], single_segment=small
+                src.select(
+                    F.col(col),
+                    F.col("__file").alias("file"),
+                    F.lit(int(reg_full["seq"])).cast("long").alias("seq"),
+                ),
+                self.path, cid, col, single_segment=small,
             )
         except Exception:  # noqa: BLE001 — drop honestly, never corrupt
             return None
-        deltas = dict(reg_full.get("deltas") or {})
-        deltas.update(spans)
         return {
             **reg_full,
             "seq": int(reg_full["seq"]) + 1,
-            "deltas": deltas,
+            "deltas": {**(reg_full.get("deltas") or {}), **spans},
         }
 
-    def files_hosting_keys(
-        self, spark: SparkSession, keys, man=None
+    def _index_entries(
+        self, spark: SparkSession, man, slot, within=None,
+        live: bool = False, required: bool = False,
+    ):
+        """The prologue every index reader shares, on the pinned
+        ``man``: ``slot``'s registration (resolved), its column's field
+        in the snapshot schema, and the ``(value, file, seq)`` entries
+        of the segments :func:`RI.prune_spans` keeps for the raw
+        ``(lo, hi)`` ranges of ``within`` (None: every segment).
+        ``live`` semi-joins the entries to ``man``'s live files.
+        Returns ``(field, entries)``, or None when ``slot`` has no
+        registration (``required`` raises instead)."""
+        reg = RI.resolve_reg(
+            self.path, self._index_regs(man.stats if man else None).get(slot)
+        )
+        if reg is None:
+            if required:
+                raise ValueError(
+                    f"no {self._index_name(slot)[2]} registered at {self.path}"
+                )
+            return None
+        field = StructType.fromJson(json.loads(man.schema_json))[reg["key"]]
+        names = RI.prune_spans(
+            {**(reg.get("base") or {}), **(reg.get("deltas") or {})},
+            None
+            if within is None
+            else [(_stat_value(lo), _stat_value(hi)) for lo, hi in within],
+        )
+        ent = RI.entries_df(spark, self.path, names, field)
+        if live:
+            import pandas as pd
+
+            files = spark.createDataFrame(
+                pd.DataFrame({"file": list(man.files)}, dtype=object),
+                schema="file string",
+            )
+            ent = ent.join(files, on="file", how="left_semi")
+        return field, ent
+
+    @staticmethod
+    def _live_hosts(man, ent: DataFrame) -> list[str]:
+        """The distinct files of index entries ``ent`` that are live at
+        ``man``, sorted: entries against removed files drop out
+        against the manifest's live set C-side."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        hits = pa.array(
+            [r["file"] for r in ent.select("file").distinct().collect()],
+            type=pa.string(),
+        )
+        return sorted(
+            hits.filter(pc.is_in(hits, value_set=man.files_arrow())).to_pylist()
+        )
+
+    def _index_hosts(
+        self, spark: SparkSession, man, slot, keys
     ) -> list[str] | None:
-        """Distinct LIVE files that may host any of ``keys`` according
-        to the record index — a SUPERSET of the true hosts (entries
-        against removed files are dropped against the manifest's live
-        set C-side; the exact filter re-applies after any scan).
-        ``keys`` is a list (span-pruned probe) or a DataFrame of key
-        values (one distributed join — the upsert-tagging shape).
-        Returns None when no index is registered (callers fall back to
-        the bloom probe).
+        """Distinct LIVE files that may hold any of ``keys`` in
+        ``slot``'s column according to its index — a SUPERSET of the
+        true hosts (the exact filter re-applies after any scan).
+        ``keys`` is a list (span-pruned probe) or a DataFrame of values
+        (one distributed join — the upsert-tagging shape). None when
+        ``slot`` has no registration (callers fall back to the bloom /
+        stats probe).
 
         ``man`` PINS the snapshot: a caller that already read the
         manifest (read_isin / read_range / read_keys prune stats and
@@ -1279,38 +1395,70 @@ class KeyedTable:
         snapshot, silently losing rows."""
         if man is None:
             man = M.read_manifest(self.path)
-        if man is None:
-            return None
-        from hudi_glue_spark.table import record_index as RI
-
-        reg = RI.resolve_reg(
-            self.path, (man.stats or {}).get("record_index")
+        joined = isinstance(keys, DataFrame)
+        probes = [] if joined else list(dict.fromkeys(keys))
+        got = self._index_entries(
+            spark, man, slot, None if joined else [(v, v) for v in probes]
         )
-        if reg is None:
+        if got is None:
             return None
-        return self._index_hosts(spark, man, reg, keys)
+        field, ent = got
+        k = field.name
+        if joined:
+            ent = ent.join(
+                keys.select(F.col(keys.columns[0]).alias(k)).dropDuplicates(),
+                on=k,
+                how="left_semi",
+            )
+        elif not probes:
+            return []
+        else:
+            ent = ent.filter(F.col(k).isin(probes))
+        return self._live_hosts(man, ent)
+
+    def record_index_info(self, at: str | None = None) -> dict | None:
+        return self._index_info(None, at)
+
+    def column_index_info(self, col: str, at: str | None = None) -> dict | None:
+        return self._index_info(col, at)
+
+    def build_record_index(
+        self, spark: SparkSession, max_records_per_file: int = 5_000_000
+    ) -> str:
+        return self._build_index(spark, None, max_records_per_file)
+
+    def build_column_index(
+        self, spark: SparkSession, col: str, max_records_per_file: int = 5_000_000
+    ) -> str:
+        return self._build_index(spark, col, max_records_per_file)
+
+    def drop_record_index(self) -> str | None:
+        return self._drop_index(None)
+
+    def drop_column_index(self, col: str) -> str | None:
+        return self._drop_index(col)
+
+    def compact_record_index(
+        self, spark: SparkSession, max_records_per_file: int = 5_000_000
+    ) -> str | None:
+        return self._compact_index(spark, None, max_records_per_file)
+
+    def compact_column_index(
+        self, spark: SparkSession, col: str, max_records_per_file: int = 5_000_000
+    ) -> str | None:
+        return self._compact_index(spark, col, max_records_per_file)
+
+    def files_hosting_keys(
+        self, spark: SparkSession, keys, man=None
+    ) -> list[str] | None:
+        """:meth:`_index_hosts` on the record index."""
+        return self._index_hosts(spark, man, None, keys)
 
     def files_hosting_values(
         self, spark: SparkSession, col: str, values, man=None
     ) -> list[str] | None:
-        """:meth:`files_hosting_keys` for a SECONDARY column index
-        (:meth:`build_column_index`) — live files that may hold any of
-        ``values`` in ``col``. None when ``col`` has no index.
-        ``man`` pins the snapshot (same race rule as
-        :meth:`files_hosting_keys`)."""
-        if man is None:
-            man = M.read_manifest(self.path)
-        if man is None:
-            return None
-        from hudi_glue_spark.table import record_index as RI
-
-        reg = RI.resolve_reg(
-            self.path,
-            ((man.stats or {}).get("column_indexes") or {}).get(col),
-        )
-        if reg is None:
-            return None
-        return self._index_hosts(spark, man, reg, values)
+        """:meth:`_index_hosts` on ``col``'s secondary index."""
+        return self._index_hosts(spark, man, col, values)
 
     def files_hosting_range(
         self, spark: SparkSession, col: str, lo, hi, man=None
@@ -1320,130 +1468,26 @@ class KeyedTable:
         column, where per-file min/max spans swallow the range in
         every file (the case :meth:`read_range` stats pruning can't
         win). None when ``col`` has no index. ``man`` pins the
-        snapshot (same race rule as :meth:`files_hosting_keys`)."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from hudi_glue_spark.table import record_index as RI
-
+        snapshot (same race rule as :meth:`_index_hosts`)."""
         if man is None:
             man = M.read_manifest(self.path)
-        if man is None:
+        got = self._index_entries(spark, man, col, [(lo, hi)])
+        if got is None:
             return None
-        reg = RI.resolve_reg(
-            self.path,
-            ((man.stats or {}).get("column_indexes") or {}).get(col),
-        )
-        if reg is None:
-            return None
-        nlo, nhi = _stat_value(lo), _stat_value(hi)
-        segs = {**(reg.get("base") or {}), **(reg.get("deltas") or {})}
-        names = sorted(
-            n
-            for n, span in segs.items()
-            if span is None
-            or span[0] is None
-            or not (span[1] < nlo or span[0] > nhi)
-        )
-        if not names:
-            return []
-        schema = StructType.fromJson(json.loads(man.schema_json))
-        kfield = next(f for f in schema.fields if f.name == col)
-        ent = RI.entries_df(spark, self.path, names, kfield)
-        hits = [
-            r["file"]
-            for r in ent.filter(F.col(col).between(lo, hi))
-            .select("file")
-            .distinct()
-            .collect()
-        ]
-        if not hits:
-            return []
-        mask = pc.is_in(
-            pa.array(hits, type=pa.string()), value_set=man.files_arrow()
-        ).to_pylist()
-        return sorted(f for f, m in zip(hits, mask) if m)
-
-    def _index_hosts(
-        self, spark: SparkSession, man, reg: dict, keys
-    ) -> list[str]:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from hudi_glue_spark.table import record_index as RI
-
-        k = reg["key"]
-        schema = StructType.fromJson(json.loads(man.schema_json))
-        kfield = next(f for f in schema.fields if f.name == k)
-        segs = {**(reg.get("base") or {}), **(reg.get("deltas") or {})}
-        if isinstance(keys, DataFrame):
-            names = sorted(segs)
-            ent = RI.entries_df(spark, self.path, names, kfield)
-            cand = (
-                ent.join(
-                    keys.select(F.col(keys.columns[0]).alias(k)).dropDuplicates(),
-                    on=k,
-                    how="left_semi",
-                )
-                .select("file")
-                .distinct()
-                .collect()
-            )
-            hits = [r["file"] for r in cand]
-        else:
-            probes = list(dict.fromkeys(keys))
-            if not probes:
-                return []
-            norm = [_stat_value(v) for v in probes]
-            names = RI.prune_isin(segs, norm)
-            if not names:
-                return []
-            ent = RI.entries_df(spark, self.path, names, kfield)
-            cand = (
-                ent.filter(F.col(k).isin(probes))
-                .select("file")
-                .distinct()
-                .collect()
-            )
-            hits = [r["file"] for r in cand]
-        if not hits:
-            return []
-        mask = pc.is_in(
-            pa.array(hits, type=pa.string()), value_set=man.files_arrow()
-        ).to_pylist()
-        return sorted(f for f, m in zip(hits, mask) if m)
+        return self._live_hosts(man, got[1].filter(F.col(col).between(lo, hi)))
 
     def locate_keys(self, spark: SparkSession, keys) -> DataFrame:
         """(key, file) pairs for the probe keys from the record index,
         filtered to live files — the index's query face (each pair
         names a file that may hold a visible row for that key).
         Raises when no index is registered."""
-        from hudi_glue_spark.table import record_index as RI
-
-        man = M.read_manifest(self.path)
-        reg = RI.resolve_reg(
-            self.path, ((man.stats or {}) if man else {}).get("record_index")
-        )
-        if reg is None:
-            raise ValueError(
-                f"no record index registered at {self.path}; "
-                "call build_record_index() first"
-            )
-        k = reg["key"]
-        schema = StructType.fromJson(json.loads(man.schema_json))
-        kfield = next(f for f in schema.fields if f.name == k)
-        segs = {**(reg.get("base") or {}), **(reg.get("deltas") or {})}
         probes = list(dict.fromkeys(keys))
-        names = RI.prune_isin(segs, [_stat_value(v) for v in probes])
-        ent = RI.entries_df(spark, self.path, names, kfield)
-        cand = ent.filter(F.col(k).isin(probes)).select(k, "file").distinct()
-        import pandas as pd
-
-        live = spark.createDataFrame(
-            pd.DataFrame({"file": list(man.files) or []}, dtype=object),
-            schema="file string",
+        field, ent = self._index_entries(
+            spark, M.read_manifest(self.path), None,
+            [(v, v) for v in probes], live=True, required=True,
         )
-        return cand.join(live, on="file", how="left_semi").select(k, "file")
+        k = field.name
+        return ent.filter(F.col(k).isin(probes)).select(k, "file").distinct()
 
     #: pruned lookup_join refuses host lists beyond this many files —
     #: past it the driver round-trip itself is the cost the full-scan
@@ -1488,42 +1532,21 @@ class KeyedTable:
         outside the host set). Falls back to the full scan past
         ``LOOKUP_PRUNE_MAX_FILES`` hosts, where the driver list
         itself becomes the cost the full-scan variant avoids."""
-        from hudi_glue_spark.table import record_index as RI
-
         man = M.read_manifest(self.path)
         if man is None:
             raise FileNotFoundError(f"no commits at {self.path}")
-        stats = man.stats or {}
-        raw = (
-            stats.get("record_index")
-            if col is None
-            else (stats.get("column_indexes") or {}).get(col)
-        )
-        reg = RI.resolve_reg(self.path, raw)
-        if reg is None:
-            what = "record" if col is None else f"column {col!r}"
-            raise ValueError(
-                f"no {what} index registered at {self.path}"
-            )
-        k = reg["key"]
-        schema = StructType.fromJson(json.loads(man.schema_json))
-        kfield = next(f for f in schema.fields if f.name == k)
-        segs = {**(reg.get("base") or {}), **(reg.get("deltas") or {})}
-        ent = RI.entries_df(spark, self.path, sorted(segs), kfield)
+        field, ent = self._index_entries(spark, man, col, required=True)
+        k = field.name
         keys = batch.select(
-            F.col(batch.columns[0]).cast(kfield.dataType).alias(k)
+            F.col(batch.columns[0]).cast(field.dataType).alias(k)
         ).dropDuplicates()
-        pairs = (
-            ent.join(keys, on=k, how="left_semi")
-            .select(F.col(k), F.col("file").alias("__file"))
-            .dropDuplicates()
-        )
+        hits = ent.join(keys, on=k, how="left_semi")
+        pairs = hits.select(F.col(k), F.col("file").alias("__file")).dropDuplicates()
         scan_files = list(man.files)
         if prune:
             hosts = {
                 r["file"]
-                for r in ent.join(keys, on=k, how="left_semi")
-                .select("file")
+                for r in hits.select("file")
                 .distinct()
                 .limit(self.LOOKUP_PRUNE_MAX_FILES + 1)
                 .collect()
@@ -1534,209 +1557,19 @@ class KeyedTable:
                 scan_files = [f for f in scan_files if f in hosts]
         rows = self._positioned_read(spark, man, scan_files)
         out = rows.join(pairs, on=[k, "__file"], how="left_semi")
-        return out.select(*[f.name for f in schema.fields])
-
-    def compact_record_index(
-        self, spark: SparkSession, max_records_per_file: int = 5_000_000
-    ) -> str | None:
-        """Fold the delta runs into fresh key-sorted base segments,
-        dropping entries whose host file left the live set — one
-        distributed pass over O(index) slim rows, no data-file I/O.
-        Published as a metadata commit; older snapshots keep their own
-        registrations (segments are immutable, clean() reclaims).
-        No index or nothing to fold → None."""
-        import pandas as pd
-
-        from hudi_glue_spark.table import record_index as RI
-
-        man = M.read_manifest(self.path)
-        if man is None:
-            return None
-        reg = RI.resolve_reg(
-            self.path, (man.stats or {}).get("record_index")
-        )
-        if reg is None or not reg.get("deltas"):
-            return None
-        k = reg["key"]
-        schema = StructType.fromJson(json.loads(man.schema_json))
-        kfield = next(f for f in schema.fields if f.name == k)
-        names = sorted({**reg["base"], **reg["deltas"]})
-        ent = RI.entries_df(spark, self.path, names, kfield)
-        live = spark.createDataFrame(
-            pd.DataFrame({"file": list(man.files) or []}, dtype=object),
-            schema="file string",
-        )
-        folded = (
-            ent.join(live, on="file", how="left_semi")
-            .select(k, "file")
-            .distinct()
-            .select(F.col(k), F.col("file"), F.lit(0).cast("long").alias("seq"))
-        )
-        cid = M.child_id(man.commit_id)
-        spans = RI.write_entries(
-            folded, self.path, cid, k, max_records_per_file
-        )
-        new_reg = {"key": k, "seq": 1, "base": spans, "deltas": {}}
-        return self._commit(
-            "record_index_compact",
-            man.files_arrow(),
-            schema,
-            cid=cid,
-            extra_stats={"record_index": new_reg},
-            base=man,
-            touched=set(),
-        )
-
-    # -- secondary column indexes (value → file; Hudi 1.0 parity) ----------
-
-    def column_index_info(self, col: str, at: str | None = None) -> dict | None:
-        from hudi_glue_spark.table import record_index as RI
-
-        man = M.read_manifest(self.path, at)
-        if man is None:
-            return None
-        return RI.resolve_reg(
-            self.path,
-            ((man.stats or {}).get("column_indexes") or {}).get(col),
-        )
-
-    def build_column_index(
-        self,
-        spark: SparkSession,
-        col: str,
-        max_records_per_file: int = 5_000_000,
-    ) -> str:
-        """SECONDARY index: the record-index machinery pointed at an
-        arbitrary column (Hudi 1.0 secondary-index parity) —
-        value-sorted ``(value, file, seq)`` segments, the same
-        registration/lifecycle (central per-commit deltas, rollback
-        restore, rebase drop, clean GC, maintenance fold), and the same
-        pruning-superset lookup (:meth:`files_hosting_values`,
-        preferred by :meth:`read_isin`). Min/max stats can't prune
-        scattered low-cardinality-per-file values (every file spans
-        most user_ids); the index can — the "find this user's events in
-        a table keyed by event_id" shape at 100 TB."""
-        from hudi_glue_spark.table import record_index as RI
-
-        man = M.read_manifest(self.path)
-        if man is None:
-            raise FileNotFoundError(f"no commits at {self.path}")
-        schema = StructType.fromJson(json.loads(man.schema_json))
-        if col not in {f.name for f in schema.fields}:
-            raise ValueError(f"no such column {col!r}")
-        src = self._positioned_read(spark, man, man.files, columns=[col])
-        ent = src.select(
-            F.col(col),
-            F.col("__file").alias("file"),
-            F.lit(0).cast("long").alias("seq"),
-        )
-        cid = M.child_id(man.commit_id)
-        spans = RI.write_entries(
-            ent, self.path, cid, col, max_records_per_file
-        )
-        prev_ci = (man.stats or {}).get("column_indexes") or {}
-        reg = {"key": col, "seq": 1, "base": spans, "deltas": {}}
-        published = self._commit(
-            "column_index",
-            man.files_arrow(),
-            schema,
-            cid=cid,
-            extra_stats={"column_indexes": {**prev_ci, col: reg}},
-            base=man,
-            touched=set(),
-        )
-        self._want_index("column", col)
-        return published
-
-    def drop_column_index(self, col: str) -> str | None:
-        man = M.read_manifest(self.path)
-        prev_ci = ((man.stats or {}) if man else {}).get("column_indexes") or {}
-        if col not in prev_ci:
-            return None
-        schema = StructType.fromJson(json.loads(man.schema_json))
-        published = self._commit(
-            "drop_column_index",
-            man.files_arrow(),
-            schema,
-            extra_stats={
-                "column_indexes": {
-                    c: r for c, r in prev_ci.items() if c != col
-                }
-            },
-            base=man,
-            touched=set(),
-        )
-        self._want_index("column", col, want=False)
-        return published
-
-    def compact_column_index(
-        self,
-        spark: SparkSession,
-        col: str,
-        max_records_per_file: int = 5_000_000,
-    ) -> str | None:
-        """:meth:`compact_record_index` for one secondary index; other
-        registrations carry through the commit untouched."""
-        import pandas as pd
-
-        from hudi_glue_spark.table import record_index as RI
-
-        man = M.read_manifest(self.path)
-        if man is None:
-            return None
-        prev_ci = (man.stats or {}).get("column_indexes") or {}
-        reg = RI.resolve_reg(self.path, prev_ci.get(col))
-        if reg is None or not reg.get("deltas"):
-            return None
-        schema = StructType.fromJson(json.loads(man.schema_json))
-        kfield = next(f for f in schema.fields if f.name == col)
-        names = sorted({**reg["base"], **reg["deltas"]})
-        ent = RI.entries_df(spark, self.path, names, kfield)
-        live = spark.createDataFrame(
-            pd.DataFrame({"file": list(man.files) or []}, dtype=object),
-            schema="file string",
-        )
-        folded = (
-            ent.join(live, on="file", how="left_semi")
-            .select(col, "file")
-            .distinct()
-            .select(
-                F.col(col), F.col("file"), F.lit(0).cast("long").alias("seq")
-            )
-        )
-        cid = M.child_id(man.commit_id)
-        spans = RI.write_entries(
-            folded, self.path, cid, col, max_records_per_file
-        )
-        new_reg = {"key": col, "seq": 1, "base": spans, "deltas": {}}
-        return self._commit(
-            "column_index_compact",
-            man.files_arrow(),
-            schema,
-            cid=cid,
-            extra_stats={"column_indexes": {**prev_ci, col: new_reg}},
-            base=man,
-            touched=set(),
-        )
+        return out.select(*StructType.fromJson(json.loads(man.schema_json)).names)
 
     def _index_segment_names(
         self, stats: dict | None, strict: bool = False
     ) -> set[str]:
         """Every ``_rli/`` file a commit's registrations keep alive
-        (record index + all column indexes): the segments, plus — for
-        a packed registration (§9d#1 spill) — the span-map sidecar
-        itself. The lifecycle unit clean()/validate() track.
-        ``strict`` propagates sidecar resolve failures (the clean()
-        liveness pass must not mistake unreadable for unreferenced)."""
-        from hudi_glue_spark.table import record_index as RI
-
-        s = stats or {}
-        regs = []
-        if s.get("record_index"):
-            regs.append(s["record_index"])
-        regs += [r for r in (s.get("column_indexes") or {}).values() if r]
+        (every slot): the segments, plus — for a packed registration
+        (§9d#1 spill) — the span-map sidecar itself. The lifecycle unit
+        clean()/validate() track. ``strict`` propagates sidecar resolve
+        failures (the clean() liveness pass must not mistake unreadable
+        for unreferenced)."""
         out: set[str] = set()
-        for r in regs:
+        for r in self._index_regs(stats).values():
             out |= RI.reg_file_names(self.path, r, strict=strict)
         return out
 
@@ -3094,7 +2927,8 @@ class KeyedTable:
         upsert's. Batch winners are appended; each base row a batch row
         beat is marked dead (under ARRIVAL_WINS: every base row of the
         batch's identities). Falls back to the rewrite upsert for new
-        tables and schema evolution (column set differs). A VECTOR
+        tables and schema evolution (the column set differs, or a batch
+        type widens its column). A VECTOR
         INDEX is maintained in place (SURVEY §9c#2): surviving base
         rows keep their stored assignments untouched (their files
         aren't rewritten — the MoR advantage), appended winners are
@@ -3110,15 +2944,20 @@ class KeyedTable:
         vidx = (man.stats or {}).get("vector_index")
         # index columns the batch doesn't carry are NULL-filled so
         # maintenance can assign them (as the rewrite upsert's evolve
-        # step does); any other column-set difference is schema
-        # evolution, which only the rewrite upsert handles
+        # step does); any other column-set difference, and a batch type
+        # WIDER than its column's, is schema evolution, which only the
+        # rewrite upsert handles (the batch conform would cast down)
         icols = (
             [vidx["cell_col"]] if vidx and vidx.get("kind") == "ivf"
             else (vidx or {}).get("bucket_cols") or []
         )
         names = set(schema.fieldNames())
         cols = {*batch.columns, *(self.derived_cols or {})}
-        if cols | names.intersection(icols) != names:
+        if cols | names.intersection(icols) != names or any(
+            _widened_type(f.dataType, batch.schema[f.name].dataType)
+            for f in schema.fields
+            if f.name in batch.columns
+        ):
             return self.upsert(batch, extra_stats=extra_stats)
         batch, extra_stats = self._admit(batch, "upsert_dv", extra_stats)
         batch = self._stage(batch, schema.fields)
@@ -3842,8 +3681,6 @@ class KeyedTable:
                 problems.append(f"orphan DV blob (cleanable): {fn}")
         # record index: every registered segment exists; unreferenced
         # segments are cleanable orphans
-        from hudi_glue_spark.table import record_index as RI
-
         ref_rli: set[str] = set()
         for cid in self.commits():
             for seg in self._index_segment_names(
@@ -4609,20 +4446,11 @@ class KeyedTable:
                     if (man.stats or {}).get("vector_index") is not None
                     else {}
                 ),
-                # same rule for the record/column indexes: the target's
+                # same rule for every index slot: the target's
                 # registrations (their segments are referenced by the
                 # still-present target commit, so clean() keeps them);
                 # registrations added after the target are dropped
-                **(
-                    {"record_index": (man.stats or {}).get("record_index")}
-                    if (man.stats or {}).get("record_index") is not None
-                    else {}
-                ),
-                **(
-                    {"column_indexes": (man.stats or {}).get("column_indexes")}
-                    if (man.stats or {}).get("column_indexes")
-                    else {}
-                ),
+                **self._index_stats(self._index_regs(man.stats)),
             },
             # a sharded target's shards are reused wholesale (file sets
             # identical) — the rollback copies ZERO per-file metadata;
@@ -4766,17 +4594,7 @@ class KeyedTable:
                 if act == "update" and cl.get("set") is not None:
                     self._check_set(cl["set"], existing.columns)
         if by_source_update_set is not None:
-            frozen = (set(self.key) | set(self.partition_by or [])) & set(
-                by_source_update_set
-            )
-            gen = set(self.derived_cols or {}) & set(by_source_update_set)
-            unknown = set(by_source_update_set) - set(existing.columns)
-            if frozen or gen or unknown:
-                raise ValueError(
-                    f"by-source SET refuses key/partition "
-                    f"{sorted(frozen)}, generated {sorted(gen)}, "
-                    f"unknown {sorted(unknown)} column(s)"
-                )
+            self._check_set(by_source_update_set, existing.columns)
         if insert_values is not None:
             unknown = set(insert_values) - set(existing.columns)
             if unknown:
@@ -5189,8 +5007,6 @@ class KeyedTable:
         # segments no commit's registration references (failed commits,
         # dropped/rebuilt indexes); segments of dropped commits are
         # derived at execute time from their still-present manifests
-        from hudi_glue_spark.table import record_index as RI
-
         all_rli: set[str] = set()
         for cid in ids:
             m = M.read_manifest(self.path, cid)
@@ -5399,8 +5215,6 @@ class KeyedTable:
         # UNKNOWN, so the whole _rli sweep is skipped this clean —
         # leaving garbage a later clean reclaims, never unlinking
         # segments it could not account for (ADVICE r10).
-        from hudi_glue_spark.table import record_index as RI
-
         rli_sweep_ok = True
         live_rli: set[str] = set()
         for cid in live_now:
@@ -5913,76 +5727,58 @@ class KeyedTable:
                 }
             except M.ConcurrentCommitError:
                 summary["recluster_skipped"] = "lost commit race"
-        # record index: fold stacked delta runs (each point lookup
-        # opens every run intersecting its span — a pure metadata-size
-        # policy, same spirit as the shard-compaction bound), and
-        # rebuild an index a rebase had to drop
-        reg = self.record_index_info()
-        man2 = M.read_manifest(self.path)
-        if reg is not None and len(reg.get("deltas") or {}) >= (
-            self.RLI_COMPACT_MIN_DELTAS
-        ):
-            try:
-                cid = self.compact_record_index(spark)
-                if cid is not None:
-                    summary["record_index_compacted"] = cid
-            except M.ConcurrentCommitError:
-                summary["rli_compact_skipped"] = "lost commit race"
-        elif reg is None and man2 is not None and (
-            (man2.stats or {}).get("record_index_dropped")
-            # wanted-index convergence (§9d#2): a commit landing between
-            # a rebase-drop and this pass hides the marker from HEAD —
-            # the persisted intent still triggers the rebuild
-            or (self.wanted_indexes or {}).get("record_index")
-        ):
-            try:
-                summary["record_index_rebuilt"] = self.build_record_index(
-                    spark
-                )
-            except (M.ConcurrentCommitError, ValueError):
-                summary["rli_rebuild_skipped"] = "lost commit race"
-        # secondary indexes: same fold/rebuild policy per column (a
-        # packed pointer carries its delta count inline — no sidecar
-        # read needed to decide)
-        head_stats = (man2.stats or {}) if man2 else {}
-        ci = head_stats.get("column_indexes") or {}
-        for c, r in ci.items():
-            nd = (
-                int(r.get("n_deltas") or 0)
-                if "ref" in r
-                else len(r.get("deltas") or {})
-            )
-            if nd >= self.RLI_COMPACT_MIN_DELTAS:
-                try:
-                    cid = self.compact_column_index(spark, c)
-                    if cid is not None:
-                        summary.setdefault(
-                            "column_index_compacted", []
-                        ).append(c)
-                except M.ConcurrentCommitError:
-                    summary["ci_compact_skipped"] = "lost commit race"
-        live_cols = (
-            {
-                f.name
-                for f in StructType.fromJson(
-                    json.loads(man2.schema_json)
-                ).fields
-            }
-            if man2 is not None
+        # indexes: one policy for every slot, decided from ONE head
+        # read. Fold a registration whose stacked delta runs reached
+        # RLI_COMPACT_MIN_DELTAS (each point lookup opens every run
+        # intersecting its span — a pure metadata-size policy, same
+        # spirit as the shard-compaction bound; a packed pointer
+        # carries its delta count inline, so deciding reads no
+        # sidecar). Rebuild a wanted index that is not registered: a
+        # rebase dropped it (its ``*_dropped`` marker is at HEAD), or
+        # the persisted intent names it (§9d#2 convergence: a commit
+        # landing between a rebase-drop and this pass hides the marker
+        # from HEAD); a column the schema lost is not rebuilt.
+        head = M.read_manifest(self.path)
+        stats = head.stats if head else None
+        regs = self._index_regs(stats)
+        want = {
+            **self._index_regs(self.wanted_indexes, _WANT_KEYS),
+            **self._index_regs(stats, _DROP_KEYS),
+        }
+        live = (
+            {None, *StructType.fromJson(json.loads(head.schema_json)).names}
+            if head
             else set()
         )
-        dropped_cols = sorted(
-            set(head_stats.get("column_indexes_dropped") or [])
-            | set((self.wanted_indexes or {}).get("columns") or [])
-        )
-        for c in dropped_cols:
-            if c in ci or c not in live_cols:
+        done: dict = {"compacted": {}, "rebuilt": {}}
+        for slot in [*regs, *sorted((want.keys() - regs.keys()) & live, key=str)]:
+            fold = slot in regs
+            if fold and RI.n_deltas(regs[slot]) < self.RLI_COMPACT_MIN_DELTAS:
                 continue
+            # a rebuild also skips a key the record index can't hold
+            errors = (
+                M.ConcurrentCommitError
+                if fold
+                else (M.ConcurrentCommitError, ValueError)
+            )
             try:
-                self.build_column_index(spark, c)
-                summary.setdefault("column_index_rebuilt", []).append(c)
-            except (M.ConcurrentCommitError, ValueError):
-                summary["ci_rebuild_skipped"] = "lost commit race"
+                cid = (self._compact_index if fold else self._build_index)(
+                    spark, slot
+                )
+            except errors:
+                verb = "compact" if fold else "rebuild"
+                summary[f"{self._index_name(slot)[1]}_{verb}_skipped"] = (
+                    "lost commit race"
+                )
+                continue
+            if cid is not None:
+                done["compacted" if fold else "rebuilt"][slot] = cid
+        for what, slots in done.items():
+            summary.update(
+                self._index_stats(
+                    slots, (f"record_index_{what}", f"column_index_{what}")
+                )
+            )
         removed = self.clean(
             retain_commits=retain_commits, orphan_grace_s=orphan_grace_s
         )
@@ -6049,10 +5845,8 @@ class KeyedTable:
         )
         # a dropped column's secondary index is gone for good — retract
         # the intent so maintenance doesn't try to rebuild it (§9d#2)
-        for c in set(cols) & set(
-            (self.wanted_indexes or {}).get("columns") or []
-        ):
-            self._want_index("column", c, want=False)
+        for c in set(cols) & self._index_regs(self.wanted_indexes, _WANT_KEYS).keys():
+            self._want_index(c, want=False)
         return published
 
     def add_columns(self, cols: dict[str, str]) -> str:
@@ -6619,7 +6413,7 @@ class KeyedTable:
         if (
             len(self.key) == 1
             and man is not None
-            and (man.stats or {}).get("record_index") is not None
+            and None in self._index_regs(man.stats)
         ):
             # The index-hosts join and the batch's own partition set
             # are INDEPENDENT jobs — overlap them (guide §2.6): the
@@ -6895,53 +6689,36 @@ class KeyedTable:
         # commit be silently clobbered out of the new snapshot instead
         # of raising ConcurrentCommitError (lost update).
         commit_id = cid or M.next_commit_id(self.path)
-        # Record-index carry: ONE central rule for every op — when the
-        # parent registers an index and this commit didn't set its own
-        # registration, append a delta run covering exactly the files
-        # this commit wrote (``written`` — the same source the
-        # manifest's O(delta) metadata uses, so no op can forget the
-        # index). Unmaintainable → drop honestly with a marker.
-        reg = prev_stats.get("record_index")
-        if reg is not None and "record_index" not in stats:
-            adv = self._rli_advance(reg, sorted(written), commit_id, schema)
-            if adv is not None:
-                stats["record_index"] = adv
-            else:
-                stats["record_index_dropped"] = op
-        # secondary column indexes: same rule, one delta run per index
-        # (each an O(delta) single-column scan of the new files)
-        prev_ci = prev_stats.get("column_indexes") or {}
-        if prev_ci and "column_indexes" not in stats:
-            new_ci: dict = {}
-            ci_dropped: list = []
-            for c, r in prev_ci.items():
+        # Index carry: ONE central rule for every slot and every op. An
+        # index op (build / compact / drop) names every slot's
+        # registration itself; any other op appends to each parent
+        # registration a delta run covering exactly the files this
+        # commit wrote (``written`` — the same source the manifest's
+        # O(delta) metadata uses, so no op can forget an index).
+        # Unmaintainable → drop honestly with a ``*_dropped`` marker.
+        dropped: dict = {}
+        if op in _INDEX_OPS:
+            regs = self._index_regs(stats)
+        else:
+            regs = {}
+            for slot, r in self._index_regs(prev_stats).items():
                 adv = self._rli_advance(r, sorted(written), commit_id, schema)
-                if adv is not None:
-                    new_ci[c] = adv
+                if adv is None:
+                    dropped[slot] = op
                 else:
-                    ci_dropped.append(c)
-            if new_ci:
-                stats["column_indexes"] = new_ci
-            if ci_dropped:
-                stats["column_indexes_dropped"] = sorted(ci_dropped)
+                    regs[slot] = adv
         # Metadata-tree spill (§9d#1): registrations whose span maps
         # outgrow REG_SPILL_BYTES move them to a parquet sidecar under
         # _rli/, the commit JSON keeping only a pointer — without this
         # a table carrying several column indexes through a long
         # un-compacted chain grows EVERY commit's JSON linearly.
-        # Central here so every op (build, compact, carry, advance)
-        # packs uniformly; already-packed pointers pass through.
-        from hudi_glue_spark.table import record_index as _RI
-
-        if stats.get("record_index"):
-            stats["record_index"] = _RI.pack_reg(
-                self.path, commit_id, stats["record_index"]
+        # Already-packed pointers pass through.
+        stats.update(
+            self._index_stats(
+                {s: RI.pack_reg(self.path, commit_id, r) for s, r in regs.items()}
             )
-        if stats.get("column_indexes"):
-            stats["column_indexes"] = {
-                c: _RI.pack_reg(self.path, commit_id, r)
-                for c, r in stats["column_indexes"].items()
-            }
+        )
+        stats.update(self._index_stats(dropped, _DROP_KEYS))
         # Deletion vectors carry forward like retired columns: a file
         # still live in this commit keeps its mask (rewritten/dropped
         # files shed theirs — a rewrite read the masked view, so the
@@ -6995,8 +6772,11 @@ class KeyedTable:
         return commit_id
 
     # Ops whose rebase is key-safe regardless of key_scope: they never
-    # introduce or remove keys, only re-arrange existing rows/files.
-    _REBASE_SAFE_OPS = frozenset({"optimize", "drop_partitions"})
+    # introduce or remove keys, only re-arrange existing rows/files (or,
+    # an index drop, touch neither).
+    _REBASE_SAFE_OPS = frozenset(
+        {"optimize", "drop_partitions", "drop_record_index", "drop_column_index"}
+    )
 
     def _staged_key_span(self, written: dict):
         """(lo, hi) normalized key span of this commit's STAGED files,
@@ -7215,6 +6995,8 @@ class KeyedTable:
                 return None  # no provable span and no probe keys
         my_schema = man.schema_json
         my_stats = man.stats
+        mine = self._index_regs(my_stats)
+        own_drops = self._index_regs(base.stats).keys() - mine.keys()
         probe_keys: list | None = None  # lazy; [] = unprovable
         probe_span = None  # typed span of the BATCH keys (lazy)
         for _ in range(5):
@@ -7283,6 +7065,21 @@ class KeyedTable:
                 for f, v in (head.dvs or {}).items()
                 if M.partition_of(f) not in touched
             }
+            # no index registration survives a rebase: my delta was
+            # sequenced against my base, rivals appended their own
+            # deltas against theirs — neither registration covers both
+            # sides' new files. Drop every slot either side registers
+            # honestly (a marker for maintenance to rebuild) rather than
+            # publish an index with false negatives — except a slot
+            # this op dropped itself, which keeps its own marker or none.
+            lost = {
+                **dict.fromkeys(
+                    (mine.keys() | self._index_regs(head.stats).keys())
+                    - own_drops,
+                    "occ_rebase",
+                ),
+                **self._index_regs(my_stats, _DROP_KEYS),
+            }
             rebased = M.Manifest(
                 commit_id=M.child_id(head.commit_id),
                 op=op,
@@ -7291,42 +7088,13 @@ class KeyedTable:
                     M.carried_files_arrow(head, touched), written
                 ),
                 schema_json=my_schema,
-                # the record index CANNOT survive a rebase: my delta was
-                # sequenced against my base, rivals appended their own
-                # deltas against theirs — neither registration covers
-                # both sides' new files. Drop honestly (marker for
-                # maintenance to rebuild) rather than publish an index
-                # with false negatives.
                 stats={
                     **{
                         s: v
                         for s, v in my_stats.items()
-                        if s not in ("record_index", "column_indexes")
+                        if s not in (*_REG_KEYS, *_DROP_KEYS)
                     },
-                    **(
-                        {"record_index_dropped": "occ_rebase"}
-                        if "record_index" in my_stats
-                        or (head.stats or {}).get("record_index") is not None
-                        else {}
-                    ),
-                    **(
-                        {
-                            "column_indexes_dropped": sorted(
-                                {
-                                    *(my_stats.get("column_indexes") or {}),
-                                    *(
-                                        (head.stats or {}).get(
-                                            "column_indexes"
-                                        )
-                                        or {}
-                                    ),
-                                }
-                            )
-                        }
-                        if my_stats.get("column_indexes")
-                        or (head.stats or {}).get("column_indexes")
-                        else {}
-                    ),
+                    **self._index_stats(lost, _DROP_KEYS),
                     "rebased_onto": head.commit_id,
                 },
                 file_meta=written,

@@ -236,21 +236,33 @@ def reg_file_names(
     return out
 
 
-def prune_isin(segments: dict[str, list | None], probes_norm: list) -> list[str]:
-    """Segment names that may hold ANY of the normalized probe values:
-    span-intersected driver-side (the registration is O(segments),
-    hundreds of entries, so plain Python beats shipping it anywhere).
-    Segments without a recorded span are always kept — pruning must
-    never be load-bearing for correctness."""
-    keep = []
-    for name, span in segments.items():
-        if span is None or span[0] is None or span[1] is None:
-            keep.append(name)
-            continue
-        lo, hi = span
-        if any(lo <= p <= hi for p in probes_norm):
-            keep.append(name)
-    return sorted(keep)
+def prune_spans(
+    segments: dict[str, list | None], ranges: list | None
+) -> list[str]:
+    """Segment names that may hold a value in ANY of the normalized
+    ``(lo, hi)`` ranges (an isin probe is ``(v, v)``; None keeps every
+    segment): span-intersected driver-side (the registration is
+    O(segments), hundreds of entries, so plain Python beats shipping it
+    anywhere). Segments without a recorded span are always kept —
+    pruning must never be load-bearing for correctness."""
+    return sorted(
+        name
+        for name, span in segments.items()
+        if ranges is None
+        or span is None
+        or None in span
+        or any(not (span[1] < lo or span[0] > hi) for lo, hi in ranges)
+    )
+
+
+def n_deltas(reg: dict | None) -> int:
+    """Delta runs stacked on a registration — a packed pointer carries
+    the count inline, so deciding a fold reads no sidecar."""
+    if reg is None:
+        return 0
+    if "ref" in reg:
+        return int(reg.get("n_deltas") or 0)
+    return len(reg.get("deltas") or {})
 
 
 def entries_df(spark, root: str, names: list[str], key_field):
@@ -273,7 +285,9 @@ def entries_df(spark, root: str, names: list[str], key_field):
     )
     d = rli_dir(root)
     if not names:
-        return spark.createDataFrame([], schema)
+        # an empty relation the optimizer folds away: a lookup whose
+        # probes every segment span misses launches no Spark job
+        return spark.createDataFrame([], schema).limit(0)
     return spark.read.schema(schema).parquet(
         *[os.path.join(d, n) for n in names]
     )

@@ -327,6 +327,32 @@ def test_upsert_dv_falls_back_on_schema_change(spark):
     assert t.read(spark).filter("extra = 'x'").count() == 1
 
 
+def test_upsert_dv_falls_back_on_type_widening(spark, tmp_path):
+    """A batch type WIDER than its column's (long over int) is schema
+    evolution too: upsert widens the committed column, and upsert_dv
+    must fall back to it rather than cast the batch down to the
+    table's type (5e9 overflows int). Both ops leave the same snapshot
+    and schema."""
+    got = {}
+    for op in ("upsert", "upsert_dv"):
+        t = KeyedTable(str(tmp_path / op), key="pk", precombine="ts")
+        t.bulk_insert(
+            spark.createDataFrame([(1, 10, 1), (2, 20, 1)], "pk int, val int, ts int")
+        )
+        getattr(t, op)(
+            spark.createDataFrame(
+                [(1, 5_000_000_000, 2), (3, 7, 2)], "pk int, val long, ts int"
+            )
+        )
+        df = t.read(spark)
+        got[op] = (df.schema.simpleString(), sorted(map(tuple, df.collect())))
+    assert got["upsert_dv"] == got["upsert"]
+    assert got["upsert"] == (
+        "struct<pk:int,val:bigint,ts:int>",
+        [(1, 5_000_000_000, 2), (2, 20, 1), (3, 7, 2)],
+    )
+
+
 # -- read paths --------------------------------------------------------------
 
 

@@ -2279,6 +2279,27 @@ def test_merge_condition_on_source_only_column(spark, tmp_path):
     assert "op" not in t.read(spark).columns
 
 
+def test_merge_by_source_set_refuses_like_update(spark, tmp_path):
+    """MERGE's NOT MATCHED BY SOURCE UPDATE SET is validated by the
+    same rule as every other SET: a key, partition, generated or
+    unknown column is refused before anything is staged."""
+    t = KeyedTable(str(tmp_path / "t"), key="pk", precombine="update_ts",
+                   partition_by="part", derived_cols={"tag": "upper(val)"})
+    ingest(t, day0(spark))
+    head = t.commits()[-1]
+    src = spark.createDataFrame(
+        [Row(pk=1, part="a", val="s1", update_ts=ts(11))])
+    for bad, msg in (
+        ({"pk": "0"}, "cannot SET key/partition"),
+        ({"part": "'z'"}, "cannot SET key/partition"),
+        ({"tag": "'x'"}, "cannot SET generated"),
+        ({"nope": "1"}, "cannot SET unknown"),
+    ):
+        with pytest.raises(ValueError, match=msg):
+            t.merge_into(src, by_source_update_set=bad)
+    assert t.commits()[-1] == head
+
+
 # -- every op returns the commit id it published -----------------------------
 
 _RETURNED_ID_OPS = {

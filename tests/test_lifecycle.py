@@ -7,6 +7,7 @@ from __future__ import annotations
 import datetime
 import os
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -1563,3 +1564,63 @@ def test_sql_call_run_clustering(spark, tmp_path):
             "CALL run_clustering(table => 't', small_file_mb => 1)",
             {"t": t},
         )
+
+
+@pytest.mark.parametrize("slot", [None, "val"], ids=["record", "column"])
+def test_index_drop_racing_upsert_keeps_rival_row(
+    spark, tmp_path, monkeypatch, slot
+):
+    """An index drop plans against one snapshot and publishes that
+    snapshot's file list, so it must publish as that snapshot's child:
+    a rival upsert landing in between makes the drop lose the race and
+    rebase onto the rival (the drop changes no rows) instead of
+    clobbering the rival's rewrite out of the table. The rebased drop
+    leaves no ``*_dropped`` marker, so run_maintenance does not rebuild
+    the index the caller dropped."""
+    from hudi_glue_spark.table import manifest as M
+
+    root = str(tmp_path / "drop_race")
+    t = KeyedTable(
+        root, key="pk", precombine="ts", partition_by="part",
+        stats_cols=["pk", "ts"], key_bloom=True,
+    )
+    schema = "pk long, part string, ts long, val long"
+    t.bulk_insert(
+        spark.createDataFrame(
+            [(i, str(i % 4), i, i * 2) for i in range(40)], schema
+        )
+    )
+    if slot is None:
+        t.build_record_index(spark)
+        drop, info = t.drop_record_index, t.record_index_info
+    else:
+        t.build_column_index(spark, slot)
+        drop = lambda: t.drop_column_index(slot)  # noqa: E731
+        info = lambda: t.column_index_info(slot)  # noqa: E731
+    orig = KeyedTable._commit
+    fired = []
+
+    def racing_commit(self, op, *a, **kw):
+        if op.startswith("drop_") and not fired:
+            fired.append(op)
+            KeyedTable.load(root).upsert(
+                spark.createDataFrame([(1000, "0", 1, -1)], schema)
+            )
+        return orig(self, op, *a, **kw)
+
+    monkeypatch.setattr(KeyedTable, "_commit", racing_commit)
+    published = drop()
+    monkeypatch.setattr(KeyedTable, "_commit", orig)
+    assert fired
+    assert t.read(spark).filter("pk = 1000").count() == 1
+    assert t.read(spark).count() == 41
+    head = M.read_manifest(root)
+    assert published == head.commit_id
+    assert head.stats.get("rebased_onto") == t.commits()[-2]
+    assert info() is None
+    assert not {"record_index_dropped", "column_indexes_dropped"} & set(
+        head.stats
+    )
+    summary = t.run_maintenance(spark)
+    assert not {"record_index_rebuilt", "column_index_rebuilt"} & set(summary)
+    assert info() is None

@@ -50,14 +50,18 @@ def rows_set(df):
     return {tuple(r) for r in df.collect()}
 
 
-def _hosts(tbl, spark, keys):
-    got = tbl.files_hosting_keys(spark, keys)
+def _hosts(tbl, spark, keys, col=None):
+    got = (
+        tbl.files_hosting_keys(spark, keys)
+        if col is None
+        else tbl.files_hosting_values(spark, col, keys)
+    )
     assert got is not None
     return got
 
 
-def _true_hosts(tbl, spark, keys):
-    k = tbl.key[0]
+def _true_hosts(tbl, spark, keys, col=None):
+    k = tbl.key[0] if col is None else col
     man = M.read_manifest(tbl.path)
     df = tbl._positioned_read(spark, man, man.files, columns=[k])
     return {
@@ -67,6 +71,29 @@ def _true_hosts(tbl, spark, keys):
         .distinct()
         .collect()
     }
+
+
+#: one set of assertions pins both index slots: the record index on the
+#: key (col None) and a secondary index on a column
+SLOTS = pytest.mark.parametrize("col", [None, "val"], ids=["record", "column"])
+
+
+def _build(tbl, spark, col):
+    if col is None:
+        return tbl.build_record_index(spark)
+    return tbl.build_column_index(spark, col)
+
+
+def _info(tbl, col, at=None):
+    if col is None:
+        return tbl.record_index_info(at)
+    return tbl.column_index_info(col, at)
+
+
+def _compact(tbl, spark, col):
+    if col is None:
+        return tbl.compact_record_index(spark)
+    return tbl.compact_column_index(spark, col)
 
 
 def test_build_and_point_lookup(spark):
@@ -136,9 +163,10 @@ def test_central_maintenance_across_ops(spark):
     assert [p for p in t.validate() if "cleanable" not in p] == []
 
 
-def test_compaction_folds_and_prunes_dead_entries(spark):
+@SLOTS
+def test_compaction_folds_and_prunes_dead_entries(spark, col):
     t = _mk(spark, "/tmp/rli_compact")
-    t.build_record_index(spark)
+    _build(t, spark, col)
     for i in range(3):
         t.upsert(
             spark.createDataFrame(
@@ -146,54 +174,59 @@ def test_compaction_folds_and_prunes_dead_entries(spark):
                 "pk long, part string, ts long, val long",
             )
         )
-    reg = t.record_index_info()
+    reg = _info(t, col)
     assert len(reg["deltas"]) == 3
-    before = {k: _hosts(t, spark, [k]) for k in (0, 7, 14, 21, 399)}
-    assert t.compact_record_index(spark) is not None
-    reg2 = t.record_index_info()
+    # keys 0, 7, 14, 21, 399 — or their current vals
+    probes = [0, 7, 14, 21, 399] if col is None else [0, -1, -2, 42, 798]
+    before = {k: _hosts(t, spark, [k], col) for k in probes}
+    assert _compact(t, spark, col) is not None
+    reg2 = _info(t, col)
     assert reg2["deltas"] == {} and reg2["base"]
     for k, hosts in before.items():
-        got = _hosts(t, spark, [k])
-        assert set(got) >= _true_hosts(t, spark, [k])
+        got = _hosts(t, spark, [k], col)
+        assert set(got) >= _true_hosts(t, spark, [k], col)
         assert set(got) <= set(hosts)  # folding only removes dead refs
     # nothing to fold -> None
-    assert t.compact_record_index(spark) is None
+    assert _compact(t, spark, col) is None
 
 
-def test_rli_rollback_and_clean_lifecycle(spark):
+@SLOTS
+def test_rli_rollback_and_clean_lifecycle(spark, col):
     t = _mk(spark, "/tmp/rli_lifecycle")
-    t.build_record_index(spark)
+    _build(t, spark, col)
     c_idx = t.commits()[-1]
     t.upsert(
         spark.createDataFrame(
             [(2, "2", 5000, -1)], "pk long, part string, ts long, val long"
         )
     )
-    reg_after = t.record_index_info()
+    reg_after = _info(t, col)
     # rollback to the index commit restores ITS registration exactly
     t.rollback(c_idx)
-    assert t.record_index_info() == t.record_index_info(at=c_idx)
-    assert t.record_index_info() != reg_after
-    assert set(_hosts(t, spark, [2])) >= _true_hosts(t, spark, [2])
+    assert _info(t, col) == _info(t, col, at=c_idx)
+    assert _info(t, col) != reg_after
+    p2 = 2 if col is None else 4  # key 2, or its val at c_idx
+    assert set(_hosts(t, spark, [p2], col)) >= _true_hosts(t, spark, [p2], col)
     # rollback to the pre-index commit drops the registration
     t.rollback(t.commits()[0])
-    assert t.record_index_info() is None
+    assert _info(t, col) is None
     # rebuild, mutate, compact, then clean: orphaned segments reclaimed,
     # registered ones survive
-    t.build_record_index(spark)
+    _build(t, spark, col)
     t.upsert(
         spark.createDataFrame(
             [(9, "1", 7000, -9)], "pk long, part string, ts long, val long"
         )
     )
-    t.compact_record_index(spark)
+    _compact(t, spark, col)
     n_before = len(RI.list_segments(t.path))
     t.clean(retain_commits=1)
     kept = set(RI.list_segments(t.path))
-    reg = t.record_index_info()
+    reg = _info(t, col)
     assert set(reg["base"]) <= kept
     assert len(kept) < n_before  # pre-compaction segments reclaimed
-    assert set(_hosts(t, spark, [9])) >= _true_hosts(t, spark, [9])
+    p9 = 9 if col is None else -9  # key 9, or its new val
+    assert set(_hosts(t, spark, [p9], col)) >= _true_hosts(t, spark, [p9], col)
     assert [p for p in t.validate() if "cleanable" not in p] == []
 
 
@@ -441,8 +474,9 @@ def test_rli_guards_and_duplicates(spark):
     assert t2.read_keys(spark, [7]).count() == 2  # bloom path still works
 
 
+@pytest.mark.parametrize("col", [None, "v"], ids=["record", "column"])
 def test_rli_dropped_on_occ_rebase_and_rebuilt_by_maintenance(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, col
 ):
     """An OCC loser's rebase cannot carry EITHER side's registration
     (each covers only its own new files) — the rebased commit drops the
@@ -467,7 +501,7 @@ def test_rli_dropped_on_occ_rebase_and_rebuilt_by_maintenance(
             [Row(id=i, grp=f"g{i % 4}", v=0.0, ts=ts(1)) for i in range(40)]
         )
     )
-    t.build_record_index(spark)
+    _build(t, spark, col)
     rival_batch = spark.createDataFrame(
         [Row(id=100 + i, grp="g1", v=9.0, ts=ts(2)) for i in range(5)]
     )
@@ -479,15 +513,25 @@ def test_rli_dropped_on_occ_rebase_and_rebuilt_by_maintenance(
     )
     monkeypatch.setattr(KeyedTable, "_write_files", orig)
     head = M.read_manifest(root)
-    assert "rebased_onto" in (head.stats or {})
-    assert (head.stats or {}).get("record_index") is None
-    assert (head.stats or {}).get("record_index_dropped") == "occ_rebase"
-    assert t.files_hosting_keys(spark, [0]) is None  # honest: no index
-    assert t.read_keys(spark, [204]).count() == 1  # bloom fallback works
+    stats = head.stats or {}
+    assert "rebased_onto" in stats
+    assert _info(t, col) is None
+    if col is None:
+        assert stats.get("record_index_dropped") == "occ_rebase"
+        assert t.files_hosting_keys(spark, [0]) is None  # honest: no index
+        assert t.read_keys(spark, [204]).count() == 1  # bloom fallback works
+    else:
+        assert stats.get("column_indexes_dropped") == [col]
+        assert t.files_hosting_values(spark, col, [0.0]) is None
+        assert t.read_isin(spark, col, [5.0]).count() == 5  # stats fallback
     summary = t.run_maintenance(spark)
-    assert "record_index_rebuilt" in summary
-    assert set(_hosts(t, spark, [204])) >= _true_hosts(t, spark, [204])
-    assert set(_hosts(t, spark, [100])) >= _true_hosts(t, spark, [100])
+    if col is None:
+        assert "record_index_rebuilt" in summary
+    else:
+        assert summary.get("column_index_rebuilt") == [col]
+    mine, rival = (204, 100) if col is None else (5.0, 9.0)
+    assert set(_hosts(t, spark, [mine], col)) >= _true_hosts(t, spark, [mine], col)
+    assert set(_hosts(t, spark, [rival], col)) >= _true_hosts(t, spark, [rival], col)
 
 
 def test_rli_global_upsert_partition_move(spark):

@@ -18,10 +18,10 @@ The enforced budget (tests/test_head_read_guard.py asserts it):
   (re-reads beyond that are exactly the lost-update window);
 - ``run_maintenance``: DERIVED per call from the executed plan
   (VERDICT r11 #6 — a constant budget would silently absorb a new
-  sub-op's undeclared pin): base = the five always-run advisor reads
+  sub-op's undeclared pin): base = the four always-run advisor reads
   (compaction_report pin, the DV-fold advisor head read,
-  index_staleness pin, record_index_info pin, the head-stats read
-  driving secondary-index policy; clean() and fold_change_logs() are
+  index_staleness pin, the one head read driving the index policy of
+  every slot; clean() and fold_change_logs() are
   HEAD-free — the commit list is a directory listing and manifests
   read pinned by id), plus each executed sub-op's own op budget from
   ``MAINTENANCE_SUBOP_HEAD``. A summary key with no declared budget
@@ -71,9 +71,9 @@ class HeadReadCounter:
 
 
 #: Always-run advisor HEAD reads inside run_maintenance (measured:
-#: compaction_report 1, DV-fold advisor 1, index_staleness 1,
-#: record_index_info 1, head-stats for secondary-index policy 1).
-MAINTENANCE_BASE_HEAD = 5
+#: compaction_report 1, DV-fold advisor 1, index_staleness 1, the
+#: index policy's head read 1 — one read decides every index slot).
+MAINTENANCE_BASE_HEAD = 4
 
 #: Per-executed-sub-op HEAD budget, keyed by the summary key the
 #: sub-op records. Mutations cost 2 (pin + OCC conflict check); a
